@@ -1,21 +1,62 @@
-"""Dashboard snapshot API — the reference's refresh cycle as one engine call.
+"""Dashboard refresh API — the reference's refresh cycle as one engine call.
 
 The reference dashboard fires 9 independent SQL queries per 5-second
 refresh, each opening a fresh connection and re-scanning storage
 (src/visualization/dashboard.py:60-68, src/metrics/queries.py:16-24). The
-engine equivalent computes the same snapshot against ONE cached windowed
-scan: the time-window filter is applied once, the filtered frame is cached,
-and all metric plans read the cache — storage is touched once per refresh
-instead of nine times. `.toPandas()` belongs to the caller (the viz edge),
-matching SURVEY.md §3.1.
+engine equivalent loads the events table ONCE per refresh and builds every
+metric frame from that one DataFrame. The time-window filter is applied
+once, the windowed slice is cached, and every windowed metric plan reads
+the cache (Spark plan-matches the cached fragment), so storage is scanned
+once per refresh instead of nine times.
+
+`chart_frames` is the render edge: it builds each frame and collects it
+with `.toPandas()` on its own thread, so the nine small plans (a few
+single-task stages each) overlap instead of queueing one after another.
+`dashboard_snapshot` returns the same frames lazily, for callers that
+collect themselves (SURVEY.md §3.1: collect only at the visualization
+edge). The window cache is registered with `caching.register_plan_cache`;
+`release` drops it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+from .caching import register_plan_cache, release_plan_caches
 from .catalog import load_table
 from .operators import metrics
+
+
+def _load_events(spark: SparkSession, sf_dir: str, hours: int, as_of: str) -> DataFrame:
+    """The refresh's one load of the events table, with its windowed slice
+    cached and materialized for every windowed metric to read."""
+    events = load_table(spark, sf_dir, "events")
+    register_plan_cache(metrics._win(events, hours, as_of).cache()).count()
+    return events
+
+
+def _frame_builders(
+    events: DataFrame, hours: int, as_of: str, vehicle_id: int | None
+) -> dict[str, Callable[[], DataFrame]]:
+    """The nine chart metrics, name → builder of its frame over `events`."""
+    win = dict(hours=hours, as_of=as_of)
+    winv = dict(win, vehicle_id=vehicle_id)
+    return {
+        "driving_event_counts": partial(metrics.driving_event_counts_frame, events, **winv),
+        "recent_alerts": partial(metrics.recent_alerts_frame, events, **winv),
+        "latest_telemetry": partial(metrics.latest_telemetry_frame, events, vehicle_id=vehicle_id),
+        "km_per_intervention": partial(metrics.km_per_intervention_frame, events, **winv),
+        "intervention_rate": partial(metrics.intervention_rate_frame, events, **win),
+        "disengagement_rate": partial(metrics.disengagement_rate_frame, events, **win),
+        "perception_summary": partial(metrics.perception_summary_frame, events, **winv),
+        "fleet_summary": partial(metrics.fleet_summary_frame, events, **win),
+        "autopilot_engagement": partial(metrics.autopilot_engagement_frame, events, **winv),
+    }
 
 
 def dashboard_snapshot(
@@ -25,38 +66,31 @@ def dashboard_snapshot(
     as_of: str = metrics.AS_OF,
     vehicle_id: int | None = None,
 ) -> dict[str, DataFrame]:
-    """All nine reference metrics for one refresh, sharing one cached scan
-    of the windowed events table. Returns name → DataFrame; call
+    """The nine chart metrics plus the sidebar's vehicle list for one
+    refresh, all built from one load of the events table and sharing one
+    cached scan of its windowed slice. Returns name → DataFrame; call
     `.toPandas()` per frame at the render edge.
 
-    The cache is per-snapshot: call `release(snapshot)` (or let Spark's LRU
-    evict) when the refresh cycle is done.
+    The window cache lives until `release(spark)` (or Spark's LRU evicts
+    it); call it when the refresh cycle is done.
     """
-    win = dict(hours=hours, as_of=as_of)
-    winv = dict(hours=hours, as_of=as_of, vehicle_id=vehicle_id)
-    # cache the windowed slice all metrics share; each metric function
-    # re-derives it, and Spark plan-matches the cached fragment
-    windowed = metrics._win(load_table(spark, sf_dir, "events"), hours, as_of)
-    windowed.cache().count()
-    return {
-        "driving_event_counts": metrics.driving_event_counts(spark, sf_dir, **winv),
-        "recent_alerts": metrics.recent_alerts(
-            spark, sf_dir, vehicle_id=vehicle_id, **win
-        ),
-        "vehicle_list": metrics.vehicle_list(spark, sf_dir),
-        "latest_telemetry": metrics.latest_telemetry(spark, sf_dir, vehicle_id=vehicle_id),
-        "km_per_intervention": metrics.km_per_intervention(spark, sf_dir, **winv),
-        "intervention_rate": metrics.intervention_rate(spark, sf_dir, **win),
-        "disengagement_rate": metrics.disengagement_rate(spark, sf_dir, **win),
-        "perception_summary": metrics.perception_summary(spark, sf_dir, **winv),
-        "fleet_summary": metrics.fleet_summary(spark, sf_dir, **win),
-        "autopilot_engagement": metrics.autopilot_engagement(spark, sf_dir, **winv),
-    }
+    events = _load_events(spark, sf_dir, hours, as_of)
+    builders = _frame_builders(events, hours, as_of, vehicle_id)
+    frames = {name: build() for name, build in builders.items()}
+    frames["vehicle_list"] = metrics.vehicle_list_frame(events)
+    return frames
 
 
-def release(spark: SparkSession) -> None:
-    """Drop snapshot caches (call between refresh cycles if memory matters)."""
-    spark.catalog.clearCache()
+def release(spark: SparkSession) -> int:
+    """Drop the refresh's window cache, with every other registered plan
+    cache (`caching.release_plan_caches`, process-wide, so `spark` is not
+    needed); caches the caller persisted itself stay. Returns how many
+    were released."""
+    return release_plan_caches()
+
+
+def _collect(build: Callable[[], DataFrame]):
+    return build().toPandas()
 
 
 def chart_frames(
@@ -80,15 +114,27 @@ def chart_frames(
     - ``alerts``, ``km_per_intervention``, ``intervention_rate``,
       ``disengagement_rate``, ``engagement``, ``fleet`` — the table widgets
 
-    All aggregation stays in-engine (one cached windowed scan via
-    `dashboard_snapshot`); only the final bounded frames cross to pandas —
-    the sole driver-side collect in the dashboard path, matching
-    SURVEY.md §3.1's "collect only at the visualization edge" rule.
+    All aggregation stays in-engine over one load of the events table and
+    one cached windowed scan; only the final bounded frames cross to pandas
+    — the sole driver-side collect in the dashboard path, matching
+    SURVEY.md §3.1's "collect only at the visualization edge" rule. Once
+    the window is cached, each of the nine frames is built and collected in
+    its own thread; `inheritable_thread_target` gives every thread the
+    caller's job group and local properties, so the refresh's jobs are
+    attributed and cancelled as one. The exception of the first failed
+    frame (in table order) propagates once every thread has finished.
     """
-    snap = dashboard_snapshot(
-        spark, sf_dir, hours=hours, as_of=as_of, vehicle_id=vehicle_id
-    )
-    pdf = {name: df.toPandas() for name, df in snap.items()}
+    events = _load_events(spark, sf_dir, hours, as_of)
+    builders = _frame_builders(events, hours, as_of, vehicle_id)
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        # wrap per task: each wrapper clones the caller's local properties,
+        # and threads sharing one clone would overwrite each other's
+        # spark.sql.execution.id while their queries run
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(_collect), build)
+            for name, build in builders.items()
+        }
+        pdf = {name: f.result() for name, f in futures.items()}
 
     telemetry = pdf["latest_telemetry"]
     alerts = pdf["recent_alerts"]

@@ -18,6 +18,12 @@ is |vehicles|, so AQE converts the join to broadcast at runtime. The ts
 window predicate is pushed into the parquet scan (at production scale the
 table would be written partitionBy(date) so the same predicate prunes
 partitions — see sources/sinks).
+
+Each metric has a frame-level builder, ``<metric>_frame(events, ...)``, over
+an events DataFrame the caller already loaded; the registered
+``(spark, sf_dir, ...)`` functions are one-line wrappers that load the table
+and call it. The dashboard loads the table once per refresh and builds every
+frame from that one DataFrame.
 """
 
 from __future__ import annotations
@@ -63,8 +69,17 @@ def driving_event_counts(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
+    return driving_event_counts_frame(_events(spark, sf_dir), hours, vehicle_id, as_of)
+
+
+def driving_event_counts_frame(
+    events: DataFrame,
+    hours: int = DEFAULT_HOURS,
+    vehicle_id: int | None = None,
+    as_of: str = AS_OF,
+) -> DataFrame:
     """COUNT(*) of interventions/disengagements per vehicle and type."""
-    df = _win(_events(spark, sf_dir), hours, as_of).filter(
+    df = _win(events, hours, as_of).filter(
         F.col("event_type").isin(INTERVENTION_TYPE, DISENGAGEMENT_TYPE)
     )
     if vehicle_id is not None:  # P4: optional equality filter (queries.py:38-41)
@@ -165,10 +180,20 @@ def recent_alerts(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
+    return recent_alerts_frame(_events(spark, sf_dir), hours, limit, vehicle_id, as_of)
+
+
+def recent_alerts_frame(
+    events: DataFrame,
+    hours: int = DEFAULT_HOURS,
+    limit: int = 100,
+    vehicle_id: int | None = None,
+    as_of: str = AS_OF,
+) -> DataFrame:
     """Latest N alerts in the window. Top-k (TakeOrderedAndProject), with a
     deterministic (time, vehicle_id, alert_type) tiebreak — the reference's
     bare ORDER BY time DESC (queries.py:56) is nondeterministic under ties."""
-    alerts = derive_alerts(_win(_events(spark, sf_dir), hours, as_of))
+    alerts = derive_alerts(_win(events, hours, as_of))
     if vehicle_id is not None:
         alerts = alerts.filter(F.col("vehicle_id") == vehicle_id)
     return alerts.orderBy(F.desc("time"), "vehicle_id", "alert_type").limit(limit)
@@ -185,9 +210,12 @@ LIMIT 100
 
 
 def vehicle_list(spark: SparkSession, sf_dir: str, limit: int = 200) -> DataFrame:
+    return vehicle_list_frame(_events(spark, sf_dir), limit)
+
+
+def vehicle_list_frame(events: DataFrame, limit: int = 200) -> DataFrame:
     return (
-        _events(spark, sf_dir)
-        .select(F.col("user_id").alias("vehicle_id"))
+        events.select(F.col("user_id").alias("vehicle_id"))
         .distinct()
         .orderBy("vehicle_id")
         .limit(limit)
@@ -205,16 +233,19 @@ SELECT DISTINCT user_id AS vehicle_id FROM events ORDER BY vehicle_id LIMIT 200
 def latest_telemetry(
     spark: SparkSession, sf_dir: str, vehicle_id: int | None = None
 ) -> DataFrame:
+    return latest_telemetry_frame(_events(spark, sf_dir), vehicle_id)
+
+
+def latest_telemetry_frame(events: DataFrame, vehicle_id: int | None = None) -> DataFrame:
     """DISTINCT ON (vehicle_id) ... ORDER BY vehicle_id, time DESC →
     row_number over (partition vehicle ORDER BY ts DESC, event_id DESC) = 1.
     The event_id tiebreak makes PostgreSQL's nondeterministic DISTINCT ON
     deterministic (SURVEY.md §7.3 watch-out)."""
-    df = _events(spark, sf_dir)
     if vehicle_id is not None:
-        df = df.filter(F.col("user_id") == vehicle_id)
+        events = events.filter(F.col("user_id") == vehicle_id)
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
-        df.withColumn("rn", F.row_number().over(w))
+        events.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             F.col("user_id").alias("vehicle_id"),
@@ -246,9 +277,18 @@ def km_per_intervention(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
+    return km_per_intervention_frame(_events(spark, sf_dir), hours, vehicle_id, as_of)
+
+
+def km_per_intervention_frame(
+    events: DataFrame,
+    hours: int = DEFAULT_HOURS,
+    vehicle_id: int | None = None,
+    as_of: str = AS_OF,
+) -> DataFrame:
     """LEFT join of two per-vehicle aggregates: distance span ⋈ intervention
     count; NULL (not 0) when interventions = 0 (queries.py:106-107)."""
-    ev = _win(_events(spark, sf_dir), hours, as_of)
+    ev = _win(events, hours, as_of)
     if vehicle_id is not None:
         ev = ev.filter(F.col("user_id") == vehicle_id)
     dist = (
@@ -291,17 +331,11 @@ ORDER BY d.vehicle_id
 """
 
 
-def _rate_per_100km(
-    spark: SparkSession,
-    sf_dir: str,
-    event_type: str,
-    hours: int,
-    as_of: str,
-) -> DataFrame:
+def _rate_per_100km(events: DataFrame, event_type: str, hours: int, as_of: str) -> DataFrame:
     """Shared J1 shape for intervention/disengagement rate per 100 km
     (queries.py:134-157 and :164-187): clamped odometer span, event count,
     rate = events / (km/100)."""
-    ev = _win(_events(spark, sf_dir), hours, as_of)
+    ev = _win(events, hours, as_of)
     dist = (
         ev.filter(F.col("event_type") == TELEMETRY_TYPE)
         .groupBy(F.col("user_id").alias("vehicle_id"))
@@ -347,13 +381,25 @@ ORDER BY d.vehicle_id
 def intervention_rate(
     spark: SparkSession, sf_dir: str, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
-    return _rate_per_100km(spark, sf_dir, INTERVENTION_TYPE, hours, as_of)
+    return intervention_rate_frame(_events(spark, sf_dir), hours, as_of)
+
+
+def intervention_rate_frame(
+    events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
+) -> DataFrame:
+    return _rate_per_100km(events, INTERVENTION_TYPE, hours, as_of)
 
 
 def disengagement_rate(
     spark: SparkSession, sf_dir: str, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
-    return _rate_per_100km(spark, sf_dir, DISENGAGEMENT_TYPE, hours, as_of)
+    return disengagement_rate_frame(_events(spark, sf_dir), hours, as_of)
+
+
+def disengagement_rate_frame(
+    events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
+) -> DataFrame:
+    return _rate_per_100km(events, DISENGAGEMENT_TYPE, hours, as_of)
 
 
 # --- 6. perception summary (queries.py:113-129: A5) ------------------------
@@ -366,10 +412,19 @@ def perception_summary(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
+    return perception_summary_frame(_events(spark, sf_dir), hours, vehicle_id, as_of)
+
+
+def perception_summary_frame(
+    events: DataFrame,
+    hours: int = DEFAULT_HOURS,
+    vehicle_id: int | None = None,
+    as_of: str = AS_OF,
+) -> DataFrame:
     """Detections per vehicle and class with mean confidence; class ↔
     event_type, confidence ↔ value (FIXTURES.md §5). Mean uses the
     count-divided exact sum so it is order-independent."""
-    ev = _win(_events(spark, sf_dir), hours, as_of)
+    ev = _win(events, hours, as_of)
     if vehicle_id is not None:
         ev = ev.filter(F.col("user_id") == vehicle_id)
     return (
@@ -398,11 +453,17 @@ ORDER BY vehicle_id, detection_count DESC, object_class
 def fleet_summary(
     spark: SparkSession, sf_dir: str, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
+    return fleet_summary_frame(_events(spark, sf_dir), hours, as_of)
+
+
+def fleet_summary_frame(
+    events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
+) -> DataFrame:
     """Single-row fleet rollup: total km, total interventions, km/intervention.
     The reference stitches three scalar subqueries (queries.py:193-203); here
     both aggregates reduce to 1-row DataFrames and cross-join — Catalyst
     executes them as broadcast nested loop over single rows."""
-    ev = _win(_events(spark, sf_dir), hours, as_of)
+    ev = _win(events, hours, as_of)
     per_vehicle = (
         ev.filter(F.col("event_type") == TELEMETRY_TYPE)
         .groupBy("user_id")
@@ -451,11 +512,18 @@ def autopilot_engagement(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
+    return autopilot_engagement_frame(_events(spark, sf_dir), hours, vehicle_id, as_of)
+
+
+def autopilot_engagement_frame(
+    events: DataFrame,
+    hours: int = DEFAULT_HOURS,
+    vehicle_id: int | None = None,
+    as_of: str = AS_OF,
+) -> DataFrame:
     """SUM(CASE WHEN engaged THEN 1 ELSE 0 END) / NULLIF(COUNT,0) ratio,
     CAST(FLOOR((·) * 100.0 + 0.5) AS DOUBLE) / 100.0 — the conditional-aggregate shape of queries.py:210-223."""
-    ev = _win(_events(spark, sf_dir), hours, as_of).filter(
-        F.col("event_type") == TELEMETRY_TYPE
-    )
+    ev = _win(events, hours, as_of).filter(F.col("event_type") == TELEMETRY_TYPE)
     if vehicle_id is not None:
         ev = ev.filter(F.col("user_id") == vehicle_id)
     engaged = F.sum(F.when(F.col("value") > ENGAGED_THRESHOLD, 1).otherwise(0))

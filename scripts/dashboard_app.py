@@ -15,8 +15,10 @@ the perception stacked bar (:184-190), and the 5-second
 ``st.rerun()`` refresh loop (:192-199).
 
 Differences, by design:
-  - all nine metric queries run against ONE cached windowed Spark scan per
-    refresh (``data_pipeline_for_autonomous_vehicles_spark.dashboard.chart_frames``) instead of the
+  - each refresh loads the events table once and runs all nine metric
+    queries against ONE cached windowed Spark scan, building and collecting
+    the nine frames concurrently, one thread per frame
+    (``data_pipeline_for_autonomous_vehicles_spark.dashboard.chart_frames``), instead of the
     reference's nine fresh psycopg2 connections re-scanning storage;
   - no folium map: the engine's events schema carries a scalar ``value``
     reading, not lat/lon columns (the spatial operators read the dedicated

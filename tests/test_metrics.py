@@ -230,3 +230,109 @@ def test_dashboard_app_contract_and_graceful_degrade(spark, sf_dir):
         )
         assert proc.returncode == 2
         assert "streamlit" in proc.stderr
+
+
+# chart frame → (metric function, whether it takes the vehicle filter)
+_CHART_METRICS = {
+    "events_bar": (metrics.driving_event_counts, True),
+    "perception_bar": (metrics.perception_summary, True),
+    "alerts": (metrics.recent_alerts, True),
+    "km_per_intervention": (metrics.km_per_intervention, True),
+    "engagement": (metrics.autopilot_engagement, True),
+    "intervention_rate": (metrics.intervention_rate, False),
+    "disengagement_rate": (metrics.disengagement_rate, False),
+    "fleet": (metrics.fleet_summary, False),
+}
+
+
+@pytest.mark.parametrize("vehicle_id", [None, 14])
+def test_chart_frames_equal_standalone_metrics(spark, sf_dir, vehicle_id):
+    """Every frame a refresh builds and collects on its own thread equals
+    its metric function's own toPandas(), row order included."""
+    from pandas.testing import assert_frame_equal
+
+    from data_pipeline_for_autonomous_vehicles_spark import dashboard
+
+    frames = dashboard.chart_frames(spark, sf_dir, vehicle_id=vehicle_id)
+    dashboard.release(spark)
+    for key, (fn, scoped) in _CHART_METRICS.items():
+        kwargs = {"vehicle_id": vehicle_id} if scoped else {}
+        assert_frame_equal(frames[key], fn(spark, sf_dir, **kwargs).toPandas(), obj=key)
+    telemetry = metrics.latest_telemetry(spark, sf_dir, vehicle_id=vehicle_id).toPandas()
+    assert frames["kpis"]["vehicles_with_data"] == len(telemetry)
+    assert frames["speed_gauge"]["value"] == float(telemetry.iloc[0]["value"])
+
+
+def test_chart_frames_jobs_carry_caller_job_group(spark, sf_dir):
+    """The frames' jobs run on pool threads; each must still carry the
+    caller's job group, which per-op job accounting and cancellation use."""
+    from data_pipeline_for_autonomous_vehicles_spark import dashboard
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("chart-frames-test", "one dashboard refresh")
+    try:
+        dashboard.chart_frames(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        dashboard.release(spark)
+    # the window materialization plus at least one job per collected frame
+    assert len(tracker.getJobIdsForGroup("chart-frames-test")) >= 10
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_dashboard_loads_events_once_per_refresh(spark, sf_dir, monkeypatch):
+    from data_pipeline_for_autonomous_vehicles_spark import catalog, dashboard
+
+    calls = []
+    original = catalog.load_table
+
+    def counting(*args, **kwargs):
+        calls.append(args[2])
+        return original(*args, **kwargs)
+
+    for module in (catalog, dashboard, metrics):
+        monkeypatch.setattr(module, "load_table", counting)
+    dashboard.chart_frames(spark, sf_dir, vehicle_id=14)
+    dashboard.release(spark)
+    assert calls == ["events"]
+    dashboard.dashboard_snapshot(spark, sf_dir)
+    dashboard.release(spark)
+    assert calls == ["events", "events"]
+
+
+@pytest.mark.parametrize("vehicle_id", [None, 14])
+def test_dashboard_windowed_frames_read_the_cache(spark, sf_dir, vehicle_id):
+    """The one-scan design rests on Spark matching each windowed frame's
+    plan to the cached window; a refactor that breaks the match would
+    silently re-scan storage per frame."""
+    from data_pipeline_for_autonomous_vehicles_spark import dashboard
+
+    snap = dashboard.dashboard_snapshot(spark, sf_dir, vehicle_id=vehicle_id)
+    try:
+        for name, df in snap.items():
+            if name in ("latest_telemetry", "vehicle_list"):  # not windowed
+                continue
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert "InMemoryRelation" in plan, name
+    finally:
+        dashboard.release(spark)
+
+
+def test_dashboard_release_keeps_caller_caches(spark, sf_dir):
+    """release() drops the refresh's window cache but, unlike the
+    session-wide clearCache(), leaves caches the caller owns."""
+    from data_pipeline_for_autonomous_vehicles_spark import catalog, dashboard
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    own = spark.range(7).cache()
+    own.count()
+    try:
+        dashboard.dashboard_snapshot(spark, sf_dir)
+        assert dashboard.release(spark) >= 1
+        assert cache_manager.lookupCachedData(own._jdf).isDefined()
+        fresh = metrics.fleet_summary_frame(catalog.load_table(spark, sf_dir, "events"))
+        assert "InMemoryRelation" not in fresh._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        own.unpersist()
