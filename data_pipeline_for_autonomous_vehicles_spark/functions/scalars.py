@@ -88,6 +88,17 @@ def sql_portable_hash(expr: str) -> str:
     return f"CAST('0x' || substring(md5({expr}), 1, 8) AS BIGINT)"
 
 
+def tokens(col: str = "text") -> Column:
+    """The whitespace tokenizer every text operator shares: lower-cased,
+    trimmed, split on runs of whitespace. A blank text gives ['']."""
+    return F.split(F.lower(F.trim(F.col(col))), r"\s+")
+
+
+def sql_tokens(col: str = "text") -> str:
+    """DuckDB twin of tokens."""
+    return f"regexp_split_to_array(lower(trim({col})), '\\s+')"
+
+
 # --- reference scalar semantics (SURVEY.md §2.8) ---------------------------
 
 

@@ -56,13 +56,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
-def _toks() -> F.Column:
-    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-
-
-_SQL_TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
 PASSAGE_TOKENS = 8
 
@@ -110,7 +105,7 @@ def repetition_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention that the rule does not fire on degenerate-length docs.
     """
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
-    toks = docs.select("doc_id", _toks().alias("toks"))
+    toks = docs.select("doc_id", tokens().alias("toks"))
 
     tcnt = (
         toks.select("doc_id", F.explode("toks").alias("w"))
@@ -165,7 +160,7 @@ def repetition_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REPETITION_SQL = f"""
 WITH toks AS (
-  SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> ''),
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> ''),
 tcnt AS (
   SELECT doc_id, w, COUNT(*) AS c
   FROM (SELECT doc_id, unnest(toks) AS w FROM toks) t GROUP BY doc_id, w),
@@ -210,7 +205,7 @@ def passage_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"i -> array_join(slice(toks, (i - 1) * {PASSAGE_TOKENS} + 1, {PASSAGE_TOKENS}), ' '))"
     )
     wins = (
-        docs.select("doc_id", _toks().alias("toks"))
+        docs.select("doc_id", tokens().alias("toks"))
         .filter(F.size("toks") >= PASSAGE_TOKENS)
         .select("doc_id", F.explode(passages).alias("passage"))
         .select("doc_id", F.md5("passage").alias("digest"))
@@ -253,7 +248,7 @@ WITH wins AS (
                i -> array_to_string(
                       toks[((i - 1) * {PASSAGE_TOKENS} + 1):((i - 1) * {PASSAGE_TOKENS} + {PASSAGE_TOKENS})],
                       ' '))) AS passage
-    FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> '') t
+    FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> '') t
     WHERE len(toks) >= {PASSAGE_TOKENS}) w),
 total AS (SELECT digest, COUNT(*) AS n_inst FROM wins GROUP BY digest)
 SELECT doc_id,
@@ -293,7 +288,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = PASSAGE_TOKENS
     wins_expr = _win_digests()
     wins = (
-        docs.select("doc_id", _toks().alias("toks"))
+        docs.select("doc_id", tokens().alias("toks"))
         .filter(F.size("toks") >= w)
         .select("doc_id", F.posexplode(wins_expr).alias("pos", "digest"))
     )
@@ -355,7 +350,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SUBSTRING_SPANS_SQL = f"""
 WITH base AS (
   SELECT doc_id, toks
-  FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> '') t
+  FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> '') t
   WHERE len(toks) >= {PASSAGE_TOKENS}),
 wins AS (
   SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
@@ -469,7 +464,7 @@ def _removal_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
-    base = docs.select("doc_id", _toks().alias("toks"))
+    base = docs.select("doc_id", tokens().alias("toks"))
     wins = _positioned_windows(base)
     # keep-first test as a digest-partitioned window MIN instead of
     # groupBy(digest).min + join-back: the join form planned the windows
@@ -557,7 +552,7 @@ def fused_curation_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SUBSTRING_REMOVAL_SQL = f"""
 WITH base AS (
-  SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> ''),
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> ''),
 wins AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,
          md5(array_to_string(toks[i : i + {PASSAGE_TOKENS} - 1], ' ')) AS digest
@@ -630,7 +625,7 @@ def substring_dup_removal_audit(
         # ivs left-join into a branch that only needs the original tokens
         frame = _removal_frame(spark, sf_dir)
         docs = _nonempty(load_table(spark, sf_dir, "documents"))
-        before = docs.select("doc_id", _toks().alias("toks"))
+        before = docs.select("doc_id", tokens().alias("toks"))
     else:
         before = frame.select("doc_id", "toks")
     after = frame.select("doc_id", F.col("kept_toks").alias("toks"))
@@ -702,7 +697,7 @@ s_{stage} AS (
 
     return f"""
 WITH before_c AS (
-  SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> ''),
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> ''),
 removal AS ({_SUBSTRING_REMOVAL_SQL}),
 after_c AS (
   SELECT doc_id, list_filter(string_split(kept_text, ' '), x -> x <> '') AS toks
@@ -730,7 +725,7 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent-sum discipline)."""
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
     tcnt = (
-        docs.select("doc_id", F.explode(_toks()).alias("w"))
+        docs.select("doc_id", F.explode(tokens()).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -754,11 +749,11 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ENTROPY_SQL = """
+_ENTROPY_SQL = f"""
 WITH tcnt AS (
   SELECT doc_id, w, COUNT(*) AS c
   FROM (SELECT doc_id,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+               unnest({sql_tokens()}) AS w
         FROM documents WHERE trim(text) <> '') t
   GROUP BY doc_id, w),
 tot AS (SELECT doc_id, SUM(c) AS n FROM tcnt GROUP BY doc_id)
@@ -793,7 +788,7 @@ def source_dedup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread_small_scan: per-doc full-token-array sort + md5 is the heavy
     # map pass here; single-split scan locally, no-op at scale
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(_toks())), " "))
+    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     per = (
         docs.select(fp.alias("digest"), "source")
         .groupBy("digest", "source")
@@ -818,7 +813,7 @@ def source_dedup_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SOURCE_OVERLAP_SQL = f"""
 WITH per AS (
-  SELECT md5(array_to_string(list_sort(list_distinct({_SQL_TOKS})), ' ')) AS digest,
+  SELECT md5(array_to_string(list_sort(list_distinct({sql_tokens()})), ' ')) AS digest,
          source, COUNT(*) AS n_copies
   FROM documents
   GROUP BY 1, 2)
@@ -883,7 +878,7 @@ def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     counts = docs.agg(F.count(F.lit(1)).alias("n_docs"))
 
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(_toks())), " "))
+    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     dups = (
         docs.select(fp.alias("digest"))
         .groupBy("digest")
@@ -911,7 +906,7 @@ def corpus_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus-token-sized aggregate costs more than recomputing it in
     # parallel branches. Left uncached deliberately.
     tcnt = (
-        docs.select("doc_id", F.explode(_toks()).alias("w"))
+        docs.select("doc_id", F.explode(tokens()).alias("w"))
         .groupBy("doc_id", "w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -960,7 +955,7 @@ WITH docs_ne AS (SELECT * FROM documents WHERE trim(text) <> ''),
 counts AS (SELECT COUNT(*) AS n_docs FROM docs_ne),
 dups AS (
   SELECT COUNT(*) AS n_dup_groups FROM (
-    SELECT md5(array_to_string(list_sort(list_distinct({_SQL_TOKS})), ' ')) AS digest,
+    SELECT md5(array_to_string(list_sort(list_distinct({sql_tokens()})), ' ')) AS digest,
            COUNT(*) AS n_members
     FROM docs_ne GROUP BY 1 HAVING COUNT(*) >= 2) t),
 lmatch AS (
@@ -970,7 +965,7 @@ lmatch AS (
   JOIN docs_ne d ON li.doc_id = d.doc_id),
 tcnt AS (
   SELECT doc_id, w, COUNT(*) AS c
-  FROM (SELECT doc_id, unnest({_SQL_TOKS}) AS w FROM docs_ne) t
+  FROM (SELECT doc_id, unnest({sql_tokens()}) AS w FROM docs_ne) t
   GROUP BY doc_id, w),
 totals AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, MAX(c) AS max_c
            FROM tcnt GROUP BY doc_id),
@@ -1063,7 +1058,7 @@ def _source_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     into n_tokens and the EPOCH_CAP ceiling)."""
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
     return (
-        docs.select("source", F.size(_toks()).cast("long").alias("n_toks"))
+        docs.select("source", F.size(tokens()).cast("long").alias("n_toks"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_toks").alias("n_tokens"))
         .withColumn(
@@ -1077,7 +1072,7 @@ def _source_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SQL_SOURCE_WEIGHTS = f"""per_source AS (
   SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len({_SQL_TOKS})) AS BIGINT) AS n_tokens
+         CAST(SUM(len({sql_tokens()})) AS BIGINT) AS n_tokens
   FROM documents WHERE trim(text) <> '' GROUP BY source),
 w AS (
   SELECT *, CAST(FLOOR(sqrt(CAST(n_tokens AS DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)
@@ -1433,7 +1428,7 @@ def curation_vocab_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     verd = curation_kept_docs(spark, sf_dir).select(
         "doc_id", (F.col("verdict") == "kept").alias("kept")
     )
-    toks = docs.select("doc_id", "lang", F.explode(_toks()).alias("tok"))
+    toks = docs.select("doc_id", "lang", F.explode(tokens()).alias("tok"))
     joined = toks.join(verd, "doc_id")
     return (
         joined.groupBy("lang")
@@ -1469,7 +1464,7 @@ def _sql_vocab_impact() -> str:
 WITH verd AS (
   SELECT doc_id, verdict = 'kept' AS kept FROM ({_sql_curation_kept()}) v),
 tok AS (
-  SELECT doc_id, lang, unnest({_SQL_TOKS}) AS tok
+  SELECT doc_id, lang, unnest({sql_tokens()}) AS tok
   FROM documents WHERE trim(text) <> ''),
 joined AS (SELECT t.lang, t.tok, v.kept FROM tok t JOIN verd v USING (doc_id))
 SELECT lang,
@@ -1853,7 +1848,7 @@ def _sql_curated_shards() -> str:
     return f"""
 WITH verd AS (SELECT doc_id, verdict FROM ({_sql_curation_kept()}) v),
 remo AS (SELECT doc_id, n_kept_tokens, kept_text FROM ({_SUBSTRING_REMOVAL_SQL}) r),
-base2 AS (SELECT doc_id, len(array_to_string({_SQL_TOKS}, ' ')) AS norm_bytes
+base2 AS (SELECT doc_id, len(array_to_string({sql_tokens()}, ' ')) AS norm_bytes
           FROM documents WHERE trim(text) <> ''),
 rem AS (SELECT r.doc_id, r.n_kept_tokens AS kept_tok, len(r.kept_text) AS kept_bytes,
                b.norm_bytes
@@ -1950,7 +1945,7 @@ def segment_df_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nothing is pairwise; the shuffle unit is the 32-char digest.
     """
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
-    segs = _segment_rows(docs.select("doc_id", _toks().alias("toks")))
+    segs = _segment_rows(docs.select("doc_id", tokens().alias("toks")))
     per = segs.groupBy("digest").agg(
         F.countDistinct("doc_id").alias("df"),
         F.count(F.lit(1)).alias("n_inst"),
@@ -1983,7 +1978,7 @@ def segment_df_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SEG_SQL_CTES = f"""base AS (
-  SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> ''),
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> ''),
 segs AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,
          CAST(LEAST(i * {PASSAGE_TOKENS}, len(toks)) - (i - 1) * {PASSAGE_TOKENS} AS BIGINT) AS ntok,
@@ -2056,7 +2051,7 @@ def _boiler_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     w = PASSAGE_TOKENS
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
-    base = docs.select("doc_id", _toks().alias("toks"))
+    base = docs.select("doc_id", tokens().alias("toks"))
     # scoped cache: segs feeds the df aggregate AND the cut-position probe
     # — without it the tokenize + md5 segmentation pass over the corpus ran
     # once per branch (guide §1.2)
@@ -2227,7 +2222,7 @@ def _boiler_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..caching import register_plan_cache
 
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
-    base = docs.select("doc_id", _toks().alias("toks"))
+    base = docs.select("doc_id", tokens().alias("toks"))
     is_delta = (F.col("doc_id") % F.lit(DELTA_MOD)) == F.lit(DELTA_MOD - 1)
     # scoped cache: segs feeds the corpus-df aggregate, the delta probe,
     # and the delta-df aggregate — three segmentation passes without it
@@ -2352,9 +2347,9 @@ def _sql_boiler_audit() -> str:
     )
     return f"""
 WITH before_base AS (
-  SELECT doc_id, {_SQL_TOKS} AS toks FROM documents WHERE trim(text) <> ''),
+  SELECT doc_id, {sql_tokens()} AS toks FROM documents WHERE trim(text) <> ''),
 after_base AS (
-  SELECT doc_id, regexp_split_to_array(lower(trim(kept_text)), '\\s+') AS toks
+  SELECT doc_id, {sql_tokens("kept_text")} AS toks
   FROM ({_BOILER_REMOVAL_SQL}) r WHERE trim(kept_text) <> ''),
 bsegs AS ({seg_of.format(b='before_base')}),
 asegs AS ({seg_of.format(b='after_base')}),

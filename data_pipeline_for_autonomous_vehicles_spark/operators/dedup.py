@@ -2,10 +2,12 @@
 
 Training-data-pipeline staples: exact dedup, normalized-fingerprint dedup,
 n-gram Jaccard near-dup, MinHash+LSH near-dup, SimHash near-dup. Everything
-is built from JVM-side column expressions (split/explode/groupBy/join) — no
-Python in the hot path — and each has a DuckDB SQL twin via the portable
-md5-based hash (functions.scalars.portable_hash; Spark's murmur3 `hash()`
-and DuckDB's `hash()` disagree, md5 doesn't).
+that reads documents is built from JVM-side column expressions
+(split/explode/groupBy/join); the one Python step is the union-find inside
+`connected_components`, which sees only label-sized edges, never documents.
+Each operator has a DuckDB SQL twin via the portable md5-based hash
+(functions.scalars.portable_hash; Spark's murmur3 `hash()` and DuckDB's
+`hash()` disagree, md5 doesn't).
 
 Scale notes (100 TB):
 - Exact/fingerprint dedup is one hash-agg on the digest — the digest
@@ -19,12 +21,20 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import register_plan_cache as _register_cache
 from ..catalog import load_table
-from ..functions.scalars import round_half_up, sql_portable_hash, sql_round_half_up
+from ..functions.scalars import (
+    round_half_up,
+    sql_portable_hash,
+    sql_round_half_up,
+    sql_tokens,
+    tokens,
+)
 
 # MinHash parameters: k hashes, b bands × r rows (k = b*r).
 MINHASH_K = 16
@@ -45,13 +55,6 @@ MAX_BUCKET = 200  # drop shingles/buckets seen in more docs than this
 # report therefore keeps each doc's top-k neighbors (output O(n·k)); the
 # full pair list stays available behind topk=None for small-corpus audits.
 TOPK_NEIGHBORS = 5
-
-
-def _tokens(col: str = "text") -> F.Column:
-    return F.split(F.lower(F.trim(F.col(col))), r"\s+")
-
-
-_SQL_TOKENS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
 
 # --- exact dedup -----------------------------------------------------------
@@ -85,7 +88,7 @@ def dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-collision fingerprint: lowercase → tokenize → distinct → sort →
     rejoin → md5. Catches token-reordered / repeated-token duplicates."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(_tokens())), " "))
+    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     return (
         docs.select("doc_id", fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -98,7 +101,7 @@ _DEDUP_FP_SQL = f"""
 SELECT fingerprint, MIN(doc_id) AS keeper_doc_id, COUNT(*) AS n_members
 FROM (
   SELECT doc_id,
-         md5(array_to_string(list_sort(list_distinct({_SQL_TOKENS})), ' ')) AS fingerprint
+         md5(array_to_string(list_sort(list_distinct({sql_tokens()})), ' ')) AS fingerprint
   FROM documents) t
 GROUP BY fingerprint
 ORDER BY keeper_doc_id
@@ -118,7 +121,7 @@ def dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     float enters the comparison path.
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(_tokens())), " "))
+    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     groups = (
         docs.select("doc_id", "n_chars", fp.alias("fingerprint"))
         .groupBy("fingerprint")
@@ -150,7 +153,7 @@ WITH groups AS (
          MIN_BY(n_chars, doc_id) AS chars_rep
   FROM (
     SELECT doc_id, n_chars,
-           md5(array_to_string(list_sort(list_distinct({_SQL_TOKENS})), ' ')) AS fingerprint
+           md5(array_to_string(list_sort(list_distinct({sql_tokens()})), ' ')) AS fingerprint
     FROM documents) t
   GROUP BY fingerprint)
 SELECT CAST(SUM(n_copies) AS BIGINT) AS n_docs,
@@ -178,7 +181,7 @@ def _shingles_df(docs: DataFrame, n: int = 3, id_col: str = "doc_id") -> DataFra
     the hypothesis admission property test on a 1-token doc)."""
     from ..catalog import spread_small_scan
 
-    toks = _tokens()
+    toks = tokens()
     shingle_expr = F.expr(
         "if(size(toks) < 3, array(), transform(sequence(1, size(toks) - 2), "
         "i -> concat_ws(' ', element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))))"
@@ -198,7 +201,7 @@ _SQL_SHINGLES = f"""
   SELECT doc_id, unnest(list_distinct(
            list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
              i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))) AS shingle
-  FROM (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents) base
+  FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents) base
 """
 
 
@@ -289,7 +292,7 @@ shc AS (
   SELECT ckey, unnest(list_distinct(
            list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
              i -> toks[i] || ' ' || toks[i + 1] || ' ' || toks[i + 2]))) AS shingle
-  FROM (SELECT ckey, {_SQL_TOKENS} AS toks FROM reps) t),
+  FROM (SELECT ckey, {sql_tokens()} AS toks FROM reps) t),
 sizes AS (SELECT ckey, COUNT(*) AS full_size FROM shc GROUP BY ckey),
 kept AS (
   SELECT * FROM shc WHERE shingle IN (
@@ -1154,7 +1157,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread_small_scan: tokenize + per-token hash + 32 vote aggregates
         # is this query's dominant map pass; single-split locally otherwise
         spread_small_scan(docs)
-        .select("doc_id", F.explode(F.array_distinct(_tokens())).alias("token"))
+        .select("doc_id", F.explode(F.array_distinct(tokens())).alias("token"))
         .select("doc_id", portable_hash("token").alias("h"))
     )
     votes = [
@@ -1184,7 +1187,7 @@ def _sql_simhash() -> str:
 WITH tok AS (
   SELECT doc_id, {h} AS h
   FROM (
-    SELECT doc_id, unnest(list_distinct({_SQL_TOKENS})) AS token
+    SELECT doc_id, unnest(list_distinct({sql_tokens()})) AS token
     FROM documents) t),
 voted AS (
   SELECT doc_id,
@@ -1439,170 +1442,121 @@ ORDER BY doc_id
 """
 
 
-# --- near-dup clustering (iterative connected components) -------------------
+# --- near-dup clustering (connected components) ------------------------------
 
-CC_MAX_ITER = 25
-STATS_RESET_EVERY = 6  # CC rounds between stats-reset flushes (see connected_components)
+# Contracted edges one union-find task takes: every round coalesces its edge
+# set to ceil(edges / EDGES_PER_TASK) partitions, so an edge set that fits one
+# task is solved in one round whatever the shuffle partition count.
+EDGES_PER_TASK = 1 << 19
 
 
-def connected_components(
-    edges: DataFrame | None, nodes: DataFrame, sym: DataFrame | None = None
-) -> DataFrame:
-    """Distributed connected components by min-label propagation: every node
-    starts labeled with itself; each round every node takes the min label in
-    its closed neighborhood; stop at fixpoint. Rounds needed = graph
-    diameter (near-dup clusters are shallow: a handful).
+def _cc_round_bound(n_edges: int) -> int:
+    """Union-find rounds `connected_components` may run on a graph of
+    `n_edges` distinct edges before it raises."""
+    return 2 * math.ceil(math.log2(n_edges + 1)) + 2
 
-    The loop is DRIVER CONTROL FLOW ONLY — per round one join + one
-    aggregate, all data-parallel; the driver sees a single exact label-sum
-    (monotone non-increasing, so "sum unchanged" ⇔ fixpoint).
-    Each round's labels are `localCheckpoint`ed (eager), which truncates
-    BOTH lineage and the logical plan: with plain cache() the plan tree
-    still nests one join level per round, and a large-diameter graph
-    (found: the sf0.1 spatial proximity graph, ~30 rounds) blows the
-    driver heap just *printing* the plan. Same hygiene as PageRank's
-    per-iteration checkpoint (graph.py).
 
-    edges: (a, b) undirected; nodes: (node) — MUST be a superset of the edge
-    endpoints (isolated nodes become singleton clusters). This is a hard
-    precondition, not a projection: an endpoint missing from `nodes` still
-    gets a label row from the propagation loop (the old corpus-labels form
-    silently dropped such endpoints at the final join; the endpoint-only
-    iteration keeps them). Every current caller passes the full entity
-    table its edges were mined from, so the two forms agree.
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(node, label) connected components of the undirected graph `edges`
+    (a, b); label = the smallest node id in the node's component.
 
-    sym: optional PRE-MATERIALIZED symmetric edge frame (src, dst) — must
-    hold BOTH directions of every edge and be cheap to re-scan per round
-    (e.g. a filtered view of one localCheckpointed tagged frame shared by
-    several component passes — see multimodal._pair_groups, which builds
-    the image and caption edge pipelines in ONE checkpoint job instead of
-    two). When given, `edges` is ignored and may be None.
+    Label contraction (Rastogi et al., ICDE 2013; Kiveris et al., SoCC
+    2014). Each round normalizes the current edges to (least, greatest),
+    drops self-loops and duplicates, and materializes and counts them; it
+    stops when none are left. Otherwise it coalesces them to
+    ceil(count / EDGES_PER_TASK) partitions, runs a union-find over each
+    partition (`mapInPandas`; the smaller id becomes the root), takes each
+    node's min root over the partitions, and relabels both the labels and
+    the edges through that map. The map sends every node to a smaller or
+    equal id of its own component and the component's min id to itself, so
+    an empty edge set means every component carries its min id. An edge set
+    that fits one task is solved by that task, so the loop ends after it;
+    larger ones shrink each round until they fit.
 
-    Statistics-squaring hazard (found round 7, image-CC at ~sf1): every
-    round's plan references `labels` TWICE (the neighbor join and the
-    pointer-jump lookup both derive from it), so Catalyst's estimated
-    sizeInBytes for the round is ~stats(labels)², and localCheckpoint
-    PRESERVES the inherited estimate — the BigInteger's digit count
-    doubles per round and by round ~18 the driver burns minutes in
-    BigInteger.multiply during planning (measured: 1 s/round flat, then
-    2/3.4/6/13/33 s…, ×2.5 per round, independent of data). The fix is a
-    stats RESET every STATS_RESET_EVERY rounds: flush labels to a scratch
-    parquet and re-scan it — a fresh file scan carries real file-size
-    stats. This is also the 100 TB-idiomatic shape (iteration state as a
-    table); the flush is labels-sized (two int64 columns), not corpus-
-    sized. Short-converging graphs (< STATS_RESET_EVERY rounds) never
-    flush, so the fast paths are unchanged.
+    Bound: the loop raises RuntimeError, naming the round count and the
+    bound, once the rounds pass 2·⌈log₂(m + 1)⌉ + 2 for m first-round edges
+    (`_cc_round_bound`) — it never returns unconverged labels.
+
+    The driver loop is control flow only. Per round: one edge
+    materialization and count, one union-find pass into a materialized
+    (node, root) map, and the joins that relabel through it. The union-find
+    is Python, but it sees only label-sized edges (two ids), never
+    documents. Catalyst estimates each relabelled edge set as the product
+    of its join inputs, so the estimate's digit count triples per round and
+    planning slows past ~12 rounds (4 cores: 0.5 s at round 10, 5 s at
+    13) — far above the one round an edge set within one task takes.
+
+    nodes: (node) — MUST be a superset of the edge endpoints; nodes without
+    an edge are singleton clusters (label = node).
     """
-    import atexit
-    import shutil
-    import tempfile
-    # Materialize the symmetrized edge list ONCE before iterating: without
-    # this, every round's neighbor join re-executes the whole upstream
-    # edge-generation pipeline (the banded-LSH candidate join, or the
-    # geo-cell join for spatial callers) — O(rounds) re-reads of the corpus
-    # at 100 TB. The edge list is the small derived table; the corpus scan
-    # it derives from is the expensive one. (Measured at sf0.1:
-    # near_dup_clusters 9.0 s -> 3.5 s.)
-    # Symmetrize via a per-row explode instead of a two-branch union: the
-    # union form planned (and executed) the entire upstream edge-generation
-    # pipeline TWICE — once per direction — inside this eager
-    # localCheckpoint; the explode emits both directions from ONE
-    # evaluation of each edge row (guide §1.2: don't compute things twice).
-    if sym is None:
-        sym = (
-            edges.select(
-                F.explode(
-                    F.array(
-                        F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                        F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                    )
-                ).alias("_e")
-            )
-            .select(F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
+    import pandas as pd
+
+    def _union_find(batches):
+        parent: dict = {}
+
+        def find(x):
+            root = x
+            while parent[root] != root:
+                root = parent[root]
+            while parent[x] != root:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for pdf in batches:
+            for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
+                ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+        yield pd.DataFrame({"node": list(parent), "root": [find(x) for x in parent]})
+
+    cur = edges.select("a", "b")
+    id_type = cur.schema["a"].dataType.simpleString()
+    labels = endpoints = bound = None
+    rounds = 0
+    while True:
+        cur = (
+            cur.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
             .localCheckpoint()
         )
-    # Iterate over EDGE-ENDPOINT nodes only (guide §1.2: don't shuffle work
-    # that cannot change). A node with no edge keeps label = itself forever,
-    # yet the old corpus-sized `labels` frame dragged every singleton
-    # through the propagation join, the pointer-jump join, and the
-    # convergence check EVERY round — at dedup scale the overwhelming
-    # majority of documents are singletons. Labels now cover only the
-    # (symmetrized) edge endpoints; singletons are appended once after the
-    # fixpoint as label = node (exactly what the loop would have computed).
-    active = sym.select(F.col("src").alias("node")).distinct().localCheckpoint()
-    labels = active.select("node", F.col("node").alias("label")).localCheckpoint()
-    spark = nodes.sparkSession
-    scratch: str | None = None
-    # Convergence via the label-sum invariant instead of a per-round
-    # join + count: every round takes least(own, ...) per node, so labels
-    # are monotone non-increasing and the EXACT sum (decimal(38,0) — no
-    # int64 overflow at any node count) strictly decreases iff any label
-    # changed. One 1-row aggregate replaces a labels⋈labels join per round.
-    _sum_label = F.coalesce(
-        F.sum(F.col("label").cast("decimal(38,0)")),
-        F.lit(0).cast("decimal(38,0)"),
-    )
-    prev_sum = labels.agg(_sum_label.alias("s")).collect()[0]["s"]
-    for it in range(CC_MAX_ITER):
-        nbr_min = (
-            sym.join(labels, sym.src == labels.node)
-            .select(F.col("dst").alias("node"), "label")
-            .groupBy("node")
-            .agg(F.min("label").alias("nbr_label"))
-            # referenced TWICE below (the propagation and, via `propagated`,
-            # both sides of the pointer-jump join) — checkpoint so the
-            # edge-sized neighbor join + aggregate runs once per round, not
-            # twice (guide §1.2)
-            .localCheckpoint()
-        )
-        propagated = labels.join(nbr_min, "node", "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
-        )
-        # pointer jumping (path compression): each node also adopts its
-        # label's label. Plain 1-hop propagation needs diameter rounds — a
-        # 1500-node proximity graph at sf0.1 has diameter > 25 and silently
-        # hit CC_MAX_ITER unconverged (caught by the sf0.1 oracle sweep);
-        # with the jump, chains halve every round → O(log diameter).
-        # NOTE (round 9, measured): a SECOND jump per round was tried (label
-        # chains would compress ~3x per round instead of 2x, fewer rounds)
-        # and is SLOWER — spatial_clusters 13.9 → 19.9 s, near_dup_clusters
-        # 4.1 → 4.6 s, media_text_pair_dedup's two loops compounding it —
-        # because each extra jump DOUBLES the un-checkpointed
-        # propagate+jump subtree (the labels⋈nbr_min join runs 4x per
-        # round instead of 2x, plus one more label-sized exchange), which
-        # costs more per round than the saved log₃-vs-log₂ rounds return
-        # on every graph in the registry. Single jump stays.
-        lookup = propagated.select(
-            F.col("node").alias("label"), F.col("label").alias("label2")
-        )
-        new_plan = propagated.join(lookup, "label", "left").select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("label2"), F.col("label"))
-            ).alias("label"),
-        )
-        if (it + 1) % STATS_RESET_EVERY == 0:
-            # stats reset (see docstring): labels-as-a-table round trip
-            if scratch is None:
-                scratch = tempfile.mkdtemp(prefix="cc_labels_")
-                atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-            path = f"{scratch}/round_{it}"
-            new_plan.write.mode("overwrite").parquet(path)
-            new_labels = spark.read.parquet(path)
-        else:
-            new_labels = new_plan.localCheckpoint()
-        cur_sum = new_labels.agg(_sum_label.alias("s")).collect()[0]["s"]
-        labels = new_labels
-        if cur_sum == prev_sum:
+        n = cur.count()
+        if bound is None:
+            bound = _cc_round_bound(n)
+        if n == 0:
             break
-        prev_sum = cur_sum
-    singles = nodes.join(active, "node", "left_anti").select(
-        "node", F.col("node").alias("label")
-    )
-    return labels.unionByName(singles)
+        rounds += 1
+        if rounds > bound:
+            raise RuntimeError(
+                f"connected_components did not converge: round {rounds} exceeds "
+                f"the bound of {bound} rounds with {n} edges left"
+            )
+        tasks = max(1, math.ceil(n / EDGES_PER_TASK))
+        root = (
+            cur.coalesce(tasks)
+            .mapInPandas(_union_find, f"node {id_type}, root {id_type}")
+            .groupBy("node")
+            .agg(F.min("root").alias("root"))
+            .localCheckpoint()
+        )
+        if labels is None:
+            endpoints = root.select("node")
+            labels = root.select("node", F.col("root").alias("label"))
+        else:
+            labels = labels.join(
+                root.withColumnRenamed("node", "label"), "label", "left"
+            ).select("node", F.coalesce("root", "label").alias("label"))
+        if tasks == 1:
+            break  # one union-find saw every edge: the labels are final
+        ra = root.select(F.col("node").alias("a"), F.col("root").alias("ra"))
+        rb = root.select(F.col("node").alias("b"), F.col("root").alias("rb"))
+        cur = cur.join(ra, "a").join(rb, "b").select(
+            F.col("ra").alias("a"), F.col("rb").alias("b")
+        )
+    singles = nodes.select("node", F.col("node").alias("label"))
+    if labels is None:
+        return singles
+    return labels.unionByName(singles.join(endpoints, "node", "left_anti"))
 
 
 def _near_dup_label_frame(
@@ -2169,7 +2123,7 @@ def decontamination_policy_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     train = docs.filter(F.col("doc_id") % EVAL_MOD != 0)
     n_toks = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+        F.size(tokens())
     ).cast("long")
     contaminated = decontamination_report(spark, sf_dir).select(
         "doc_id", "contamination_rate"
@@ -2232,7 +2186,7 @@ def _sql_decon_policy_sweep() -> str:
     thetas = ", ".join(f"{t!r}::DOUBLE" for t in DECON_RATE_GRID)
     ntoks = (
         "CASE WHEN trim(text) = '' THEN 0 "
-        "ELSE len(regexp_split_to_array(lower(trim(text)), '\\s+')) END"
+        f"ELSE len({sql_tokens()}) END"
     )
     return f"""
 WITH rates AS (SELECT doc_id, contamination_rate FROM ({_DECONTAM_SQL}) r),
@@ -2281,7 +2235,7 @@ def cv_fold_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.scalars import portable_hash
 
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(_tokens())), " "))
+    fp = F.md5(F.array_join(F.array_sort(F.array_distinct(tokens())), " "))
     fold = (
         portable_hash(F.concat(F.lit(_FOLD_SALT), F.col("doc_id").cast("string")))
         % N_FOLDS
@@ -2320,7 +2274,7 @@ _CV_LEAK_SQL = f"""
 WITH keyed AS (
   SELECT doc_id,
          {sql_portable_hash(f"'{_FOLD_SALT}' || CAST(doc_id AS VARCHAR)")} % {N_FOLDS} AS fold,
-         md5(array_to_string(list_sort(list_distinct({_SQL_TOKENS})), ' ')) AS fingerprint
+         md5(array_to_string(list_sort(list_distinct({sql_tokens()})), ' ')) AS fingerprint
   FROM documents),
 spread AS (
   SELECT fingerprint, COUNT(DISTINCT fold) AS n_folds

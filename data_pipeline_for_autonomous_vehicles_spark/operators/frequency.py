@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..caching import register_plan_cache as _register_cache
 from ..catalog import load_table
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
 HOT_MULTIPLE_E1 = 15  # threshold = 1.5× mean frequency, as tenths
 TOP_K = 100
@@ -171,10 +171,6 @@ CMS_WIDTH = 512
 CMS_TOP_K = 20
 
 
-def _doc_tokens() -> F.Column:
-    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-
-
 def _cms_bucket(token_col: F.Column, d: int) -> F.Column:
     from ..functions.scalars import portable_hash
 
@@ -198,7 +194,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist only to audit; at deployment scale only the sketch is kept.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(_doc_tokens()).alias("token")).filter(
+    toks = docs.select(F.explode(tokens()).alias("token")).filter(
         F.length("token") >= 1
     ).cache()
     grid = F.array(
@@ -258,7 +254,7 @@ def _sql_cms() -> str:
     return f"""
 WITH tk AS (
   SELECT token FROM (
-    SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+    SELECT unnest({sql_tokens()}) AS token
     FROM documents) t
   WHERE length(token) >= 1),
 grid AS ({grid}),

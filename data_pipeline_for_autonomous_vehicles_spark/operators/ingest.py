@@ -64,6 +64,8 @@ from ..functions.scalars import (
     round_half_up,
     sql_portable_hash,
     sql_round_half_up,
+    sql_tokens,
+    tokens,
 )
 
 # reject a delta doc on sight when boilerplate segments would cut at least
@@ -95,7 +97,6 @@ def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         _excise,
         _nonempty,
         _positioned_windows,
-        _toks,
     )
     from .dedup import (
         MAX_BUCKET,
@@ -179,7 +180,7 @@ def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ENTIRE corpus window frame through one exchange. Unlike
     # `_removal_frame` (whose every row participates), the delta split
     # makes recompute-cheap-and-filter the right trade.
-    base_all = _nonempty(docs).select("doc_id", _toks().alias("toks"))
+    base_all = _nonempty(docs).select("doc_id", tokens().alias("toks"))
     wins = _positioned_windows(base_all)
     c_keep = wins.filter(~_is_delta()).groupBy("digest").agg(
         F.min("doc_id").alias("_c_min")
@@ -347,7 +348,6 @@ def _sql_admission_manifest() -> str:
     from .corpus import (
         FLUENCY_FLOOR,
         PASSAGE_TOKENS,
-        _SQL_TOKS,
         _sql_boiler_delta,
     )
     from .dedup import (
@@ -380,7 +380,7 @@ clf AS (SELECT doc_id, keep_flag FROM ({_CLF_SQL}) c),
 flu AS (SELECT doc_id, fluency_score FROM ({_FLUENCY_SQL}) f),
 boil AS (SELECT doc_id, n_tokens AS b_tot, n_cut_tokens AS b_cut
          FROM ({_sql_boiler_delta()}) bb),
-basex AS (SELECT doc_id, {_SQL_TOKS} AS toks
+basex AS (SELECT doc_id, {sql_tokens()} AS toks
           FROM documents WHERE trim(text) <> ''),
 winsx AS (
   SELECT doc_id, CAST(i AS BIGINT) AS pos,

@@ -486,42 +486,21 @@ def _pair_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt_edges = _lsh_candidates(sigs).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    # ONE symmetrized-edge materialization for BOTH component passes (round-9
-    # verdict task 1, guide §1.2): the image-edge pipeline (phash + banded
-    # Hamming join) and the caption-edge pipeline (MinHash-LSH banded join)
-    # are unioned under a modality tag and checkpointed in a single job —
-    # Spark runs the two edge builds as parallel independent stages instead
-    # of two driver-serialized checkpoint jobs, and each CC loop iterates
-    # over a cheap filtered view of the one materialized frame.
-    tagged = img_edges.select(F.lit(0).alias("_m"), "a", "b").unionByName(
-        txt_edges.select(F.lit(1).alias("_m"), "a", "b")
-    )
-    sym_all = (
-        tagged.select(
-            "_m",
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("_e"),
-        )
-        .select("_m", F.col("_e.src").alias("src"), F.col("_e.dst").alias("dst"))
+    # ONE edge materialization for BOTH component passes: the image-edge
+    # pipeline (phash + banded Hamming join) and the caption-edge pipeline
+    # (MinHash-LSH banded join) are unioned under a modality tag and
+    # checkpointed in a single job, so Spark runs the two edge builds as
+    # parallel stages instead of two driver-serialized jobs; each component
+    # pass then reads its filtered slice of the checkpoint once.
+    tagged = (
+        img_edges.select(F.lit(0).alias("_m"), "a", "b")
+        .unionByName(txt_edges.select(F.lit(1).alias("_m"), "a", "b"))
         .localCheckpoint()
     )
-    # split the tagged frame into MODALITY-PURE checkpoints before looping:
-    # a lazy filtered view would make every CC round of each loop re-scan
-    # and re-filter BOTH modalities' edges (measured +60% on the pair
-    # manifest); these two splits are cheap re-scans of the in-memory
-    # checkpoint, after which each loop's per-round join reads only its own
-    # edges — the expensive edge PIPELINES still ran exactly once, in the
-    # one parallel job above.
-    img_sym = sym_all.filter(F.col("_m") == 0).select("src", "dst").localCheckpoint()
-    txt_sym = sym_all.filter(F.col("_m") == 1).select("src", "dst").localCheckpoint()
-    img = connected_components(None, docs, sym=img_sym).select(
+    img = connected_components(tagged.filter(F.col("_m") == 0), docs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("img_group")
     )
-    txt = connected_components(None, docs, sym=txt_sym).select(
+    txt = connected_components(tagged.filter(F.col("_m") == 1), docs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("txt_group")
     )
     return img.join(txt, "doc_id")
@@ -539,9 +518,9 @@ def media_text_pair_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy applied at pair grain). One row per doc: its two component
     labels, its pair-group size, and whether it is the kept canonical.
 
-    Scale (100 TB): both component passes are the shared iterative
-    min-label propagation (localCheckpoint per round, edges materialized
-    once); edges come from banded equi-joins (phash bands / MinHash-LSH
+    Scale (100 TB): both component passes are the shared label-contraction
+    loop (`dedup.connected_components`), fed by one materialization of both
+    edge sets; edges come from banded equi-joins (phash bands / MinHash-LSH
     bands) — digest-only shuffles, never payload or text; the pair-group
     key is two int64 labels and canonical election is one
     max(struct(quality, -doc_id)) partial aggregate per group — no window.

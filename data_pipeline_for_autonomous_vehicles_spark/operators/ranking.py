@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 import math as _math
 
 from ..catalog import load_table
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
 
 def rank_of_topk(top: DataFrame, score_desc: str, tiebreak_asc: str) -> DataFrame:
@@ -80,7 +80,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale (catalog docstring)
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
     toks = F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"), lambda x: x != ""
+        tokens(), lambda x: x != ""
     )
     nq = len(QUERY_TERMS)
 
@@ -146,7 +146,7 @@ def _sql_bm25() -> str:
     in_list = ", ".join(f"'{t}'" for t in QUERY_TERMS)
     return f"""
 WITH terms AS (
-  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+  SELECT doc_id, unnest({sql_tokens()}) AS term
   FROM documents),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM terms WHERE term <> ''
@@ -200,7 +200,7 @@ def term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     terms = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("term"),
+        F.explode(tokens()).alias("term"),
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     return (
@@ -218,7 +218,7 @@ def term_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _POSTINGS_SQL = f"""
 WITH terms AS (
-  SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS term
+  SELECT doc_id, unnest({sql_tokens()}) AS term
   FROM documents),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM terms WHERE term <> ''
@@ -252,7 +252,7 @@ def _rel_expr() -> F.Column:
     shared-token labels put BM25 at the NDCG ceiling BY CONSTRUCTION
     (the labels are what BM25 ranks); the source component is what lets
     the report distinguish the systems rather than re-derive BM25."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     # the source component COALESCEs to 0 when qsource is NULL (anchor doc
     # absent) — the SQL twin's CASE does the same, so a missing anchor
     # degrades to lexical-only labels instead of NULLing every grade
@@ -429,7 +429,7 @@ def _sql_ndcg_report() -> str:
 WITH rel AS (
   SELECT doc_id, ({rel_sum}) AS rel
   FROM (SELECT doc_id, source,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
+               {sql_tokens()} AS toks
         FROM documents) t),
 bm AS (
   SELECT r.rank, rel.rel FROM ({_sql_bm25()}) r JOIN rel ON r.doc_id = rel.doc_id),

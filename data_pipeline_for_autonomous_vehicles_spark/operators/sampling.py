@@ -26,7 +26,13 @@ from pyspark.sql import functions as F
 
 from ..caching import register_plan_cache as _register_cache
 from ..catalog import load_table
-from ..functions.scalars import portable_hash, round_half_up, sql_portable_hash
+from ..functions.scalars import (
+    portable_hash,
+    round_half_up,
+    sql_portable_hash,
+    sql_tokens,
+    tokens,
+)
 
 SAMPLE_K = 20
 _SALT = "wsample:"
@@ -108,7 +114,7 @@ def _dsir_doc_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     # family's dominant map pass (the "md5-bound" wall) and the documents
     # file scans as one split locally; no-op at scale (catalog docstring)
     docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     bigrams = F.expr(
         "zip_with(slice(toks, 1, greatest(size(toks) - 1, 0)), "
         "slice(toks, 2, greatest(size(toks) - 1, 0)), "
@@ -221,7 +227,7 @@ _DSIR_CELLS_SQL = f"""
            unnest(list_concat(t, list_transform(range(1, len(t)),
                   i -> t[i] || ' ' || t[i+1]))) AS gram
     FROM (SELECT doc_id, lang,
-                 regexp_split_to_array(lower(trim(text)), '\\s+') AS t
+                 {sql_tokens()} AS t
           FROM documents) toks) grams
   GROUP BY 1, 2, 3"""
 

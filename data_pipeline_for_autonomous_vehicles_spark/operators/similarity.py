@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..caching import register_plan_cache as _register_cache
 from ..catalog import load_table, spread_small_scan
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
 
 def _emb_table(spark, sf_dir):
@@ -828,7 +828,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_table(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     tf = {
         t: F.size(F.filter(toks, lambda x: x == F.lit(t))).alias(f"tf_{t}")
         for t in QUERY_TERMS
@@ -926,7 +926,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_hybrid() -> str:
     tf_cols = ",\n         ".join(
-        f"len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), x -> x = '{t}')) AS tf_{t}"
+        f"len(list_filter({sql_tokens()}, x -> x = '{t}')) AS tf_{t}"
         for t in QUERY_TERMS
     )
     df_cols = ",\n         ".join(

@@ -188,9 +188,9 @@ def spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (100 TB trajectory stores): edge generation is the SAME 3×3
     grid-cell equi-join as `nearby_vehicle_pairs` — O(n·density), never
-    O(n²) — and the component pass is the shared min-label-propagation
-    loop (`dedup.connected_components`: one join + agg per round, lineage
-    truncated per iteration). The oracle twin is brute-force O(n²) +
+    O(n²) — and the component pass is the shared label-contraction loop
+    (`dedup.connected_components`: a per-partition union-find per round,
+    bounded rounds or it raises). The oracle twin is brute-force O(n²) +
     recursive CTE, so the check proves bucketed+iterative == naive.
     """
     from .dedup import connected_components

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, spread_small_scan
-from ..functions.scalars import round_half_up, sql_round_half_up
+from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
 
 def _docs_table(spark, sf_dir):
@@ -28,22 +28,18 @@ def _docs_table(spark, sf_dir):
     one core otherwise. No-op on any at-scale scan (catalog docstring)."""
     return spread_small_scan(load_table(spark, sf_dir, "documents"))
 
-def _tokens() -> F.Column:
-    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-_SQL_TOKENS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
-
 
 def _n_tok() -> F.Column:
     """Empty-guarded whitespace token count — the ONE spelling every
     token-counting operator (here and in assembly.py) shares."""
     return (
         F.when(F.trim(F.col("text")) == "", F.lit(0))
-        .otherwise(F.size(_tokens()))
+        .otherwise(F.size(tokens()))
         .cast("long")
     )
 
 
-_SQL_N_TOK = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({_SQL_TOKENS}) END"
+_SQL_N_TOK = f"CASE WHEN trim(text) = '' THEN 0 ELSE len({sql_tokens()}) END"
 
 # language marker vocabularies (n-gram heuristic): deterministic, public
 # stopword-style markers. The classifier is judged against its SQL twin, not
@@ -60,9 +56,9 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace token count + distinct-token count + type/token ratio."""
     docs = _docs_table(spark, sf_dir)
-    n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(_tokens()))
+    n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(tokens()))
     n_distinct = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
-        F.size(F.array_distinct(_tokens()))
+        F.size(F.array_distinct(tokens()))
     )
     return docs.select(
         "doc_id",
@@ -81,9 +77,9 @@ SELECT doc_id, n_tokens, n_distinct_tokens,
              / CAST(NULLIF(n_tokens, 0) AS DOUBLE)) * 10000.0 + 0.5) AS DOUBLE) / 10000.0 AS type_token_ratio
 FROM (
   SELECT doc_id,
-         CASE WHEN trim(text) = '' THEN 0 ELSE len({_SQL_TOKENS}) END AS n_tokens,
+         CASE WHEN trim(text) = '' THEN 0 ELSE len({sql_tokens()}) END AS n_tokens,
          CASE WHEN trim(text) = '' THEN 0
-              ELSE len(list_distinct({_SQL_TOKENS})) END AS n_distinct_tokens
+              ELSE len(list_distinct({sql_tokens()})) END AS n_distinct_tokens
   FROM documents) t
 ORDER BY doc_id
 """
@@ -103,10 +99,10 @@ def _quality_score_col() -> F.Column:
     (text, n_chars) columns — shared by `_quality_frame` and the one-scan
     calibration report."""
     en = LANG_MARKERS["en"]
-    n_tokens = F.size(_tokens()).cast("double")
-    n_distinct = F.size(F.array_distinct(_tokens())).cast("double")
+    n_tokens = F.size(tokens()).cast("double")
+    n_distinct = F.size(F.array_distinct(tokens())).cast("double")
     stop_hits = F.size(
-        F.array_intersect(F.array_distinct(_tokens()), F.array(*[F.lit(w) for w in en]))
+        F.array_intersect(F.array_distinct(tokens()), F.array(*[F.lit(w) for w in en]))
     ).cast("double")
     length_score = F.least(F.lit(1.0), F.col("n_chars").cast("double") / F.lit(400.0))
     ttr = n_distinct / n_tokens
@@ -127,10 +123,10 @@ _EN_LIST = "[" + ", ".join(f"'{w}'" for w in LANG_MARKERS["en"]) + "]"
 _QUALITY_SQL = f"""
 SELECT doc_id, lang,
        CAST(FLOOR((0.4::DOUBLE * LEAST(1.0::DOUBLE, CAST(n_chars AS DOUBLE) / 400.0::DOUBLE)
-             + 0.3::DOUBLE * (CAST(len(list_distinct({_SQL_TOKENS})) AS DOUBLE)
-                      / CAST(len({_SQL_TOKENS}) AS DOUBLE))
+             + 0.3::DOUBLE * (CAST(len(list_distinct({sql_tokens()})) AS DOUBLE)
+                      / CAST(len({sql_tokens()}) AS DOUBLE))
              + 0.3::DOUBLE * LEAST(1.0::DOUBLE,
-                 CAST(len(list_intersect(list_distinct({_SQL_TOKENS}), {_EN_LIST})) AS DOUBLE)
+                 CAST(len(list_intersect(list_distinct({sql_tokens()}), {_EN_LIST})) AS DOUBLE)
                  / {float(len(LANG_MARKERS['en']))}::DOUBLE * 2.0::DOUBLE)) * 10000.0 + 0.5) AS DOUBLE) / 10000.0 AS quality_score
 FROM documents
 ORDER BY doc_id
@@ -181,7 +177,7 @@ def _clf_exprs() -> dict[str, F.Column]:
     report."""
     from ..functions.scalars import portable_hash
 
-    toks = F.filter(_tokens(), lambda t: t != F.lit(""))
+    toks = F.filter(tokens(), lambda t: t != F.lit(""))
 
     def weight(t: F.Column) -> F.Column:
         bucket = portable_hash(t) % F.lit(CLF_BUCKETS)
@@ -225,9 +221,9 @@ SELECT doc_id, lang,
        CAST(CASE WHEN s >= 0 AND n > 0 THEN 1 ELSE 0 END AS INT) AS keep_flag
 FROM (
   SELECT doc_id, lang,
-         len(list_filter({_SQL_TOKENS}, t -> t <> '')) AS n,
+         len(list_filter({sql_tokens()}, t -> t <> '')) AS n,
          COALESCE(CAST(list_sum(list_transform(
-             list_filter({_SQL_TOKENS}, t -> t <> ''),
+             list_filter({sql_tokens()}, t -> t <> ''),
              t -> {_CLF_W})) AS BIGINT), 0) AS s
   FROM documents) f
 ORDER BY doc_id
@@ -392,7 +388,7 @@ def bigram_fluency_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bigram_posts(docs: DataFrame) -> DataFrame:
     """(doc_id, bigram, occ) postings of any (doc_id, text) frame."""
     return (
-        docs.select("doc_id", _tokens().alias("toks"))
+        docs.select("doc_id", tokens().alias("toks"))
         .select("doc_id", F.explode(F.expr(_BIGRAMS)).alias("bigram"))
         .groupBy("doc_id", "bigram")
         .agg(F.count(F.lit(1)).alias("occ"))
@@ -443,7 +439,7 @@ WITH posts AS (
   SELECT doc_id, bigram, COUNT(*) AS occ
   FROM (
     SELECT doc_id, unnest({_SQL_BIGRAMS}) AS bigram
-    FROM (SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents) base) b
+    FROM (SELECT doc_id, {sql_tokens()} AS toks FROM documents) base) b
   GROUP BY doc_id, bigram),
 counts AS (SELECT bigram, SUM(occ) AS corpus_count FROM posts GROUP BY bigram),
 scored AS (
@@ -465,7 +461,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-vocabulary language ID: count distinct marker hits per language,
     predict the argmax (deterministic tiebreak: language code order)."""
     docs = _docs_table(spark, sf_dir)
-    toks = F.array_distinct(_tokens())
+    toks = F.array_distinct(tokens())
     hits = {
         lang: F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
         for lang, words in LANG_MARKERS.items()
@@ -491,7 +487,7 @@ def _sql_lang_id() -> str:
 
     def hit(lang: str) -> str:
         lst = "[" + ", ".join(f"'{w}'" for w in LANG_MARKERS[lang]) + "]"
-        return f"len(list_intersect(list_distinct({_SQL_TOKENS}), {lst}))"
+        return f"len(list_intersect(list_distinct({sql_tokens()}), {lst}))"
 
     # same left-to-right argmax chain as the Spark plan
     best = f"'{langs[0]}'"
@@ -545,7 +541,7 @@ def doc_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # engine (DuckDB raises on BIGINT overflow; Spark would wrap silently)
     mersenne = (1 << 31) - 1
     tok_hashes = F.transform(
-        _tokens(), lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
+        tokens(), lambda t: F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long")
     )
     fp = F.aggregate(
         tok_hashes,
@@ -559,7 +555,7 @@ _ROLLING_FP_SQL = f"""
 SELECT doc_id,
        list_reduce(
          list_prepend(0::BIGINT,
-           list_transform({_SQL_TOKENS},
+           list_transform({sql_tokens()},
              t -> CAST('0x' || substring(md5(t), 1, 8) AS BIGINT))),
          (acc, t) -> (acc * 31 + t) % {(1 << 31) - 1}) AS rolling_fp
 FROM documents
@@ -584,7 +580,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _docs_table(spark, sf_dir)
     terms = docs.select(
-        "doc_id", F.explode(_tokens()).alias("term")
+        "doc_id", F.explode(tokens()).alias("term")
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -606,7 +602,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TFIDF_SQL = f"""
 WITH terms AS (
-  SELECT doc_id, unnest({_SQL_TOKENS}) AS term FROM documents),
+  SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents),
 tf AS (
   SELECT doc_id, term, COUNT(*) AS tf FROM terms WHERE term <> ''
   GROUP BY doc_id, term),
@@ -1104,7 +1100,7 @@ def bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(_BPE_PATTERN_SPARK), F.lit(0))
     )
-    ws = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(_tokens()))
+    ws = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(tokens()))
     return docs.select(
         "doc_id",
         bpe.alias("n_bpe_tokens"),
@@ -1123,7 +1119,7 @@ SELECT doc_id, n_bpe_tokens, n_ws_tokens,
 FROM (
   SELECT doc_id,
          len(regexp_extract_all(lower(text), '{_BPE_PATTERN_SQL}')) AS n_bpe_tokens,
-         CASE WHEN trim(text) = '' THEN 0 ELSE len({_SQL_TOKENS}) END AS n_ws_tokens
+         CASE WHEN trim(text) = '' THEN 0 ELSE len({sql_tokens()}) END AS n_ws_tokens
   FROM documents) t
 ORDER BY doc_id
 """
@@ -1147,7 +1143,7 @@ def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(_BPE_PATTERN_SPARK), F.lit(0))
     )
-    ws = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(_tokens()))
+    ws = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(tokens()))
     per_doc = docs.select(
         "lang", bpe.alias("b"), ws.alias("w"), F.col("n_chars").cast("long").alias("ch")
     )
@@ -1187,7 +1183,7 @@ SELECT lang,
 FROM (
   SELECT lang,
          len(regexp_extract_all(lower(text), '{_BPE_PATTERN_SQL}')) AS b,
-         CASE WHEN trim(text) = '' THEN 0 ELSE len({_SQL_TOKENS}) END AS w,
+         CASE WHEN trim(text) = '' THEN 0 ELSE len({sql_tokens()}) END AS w,
          CAST(n_chars AS BIGINT) AS ch
   FROM documents) t
 GROUP BY lang
@@ -1214,7 +1210,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the winning pair merged — each round is this same one-agg plan.
     """
     docs = _docs_table(spark, sf_dir)
-    words = docs.select(F.explode(_tokens()).alias("word")).filter(F.length("word") >= 2)
+    words = docs.select(F.explode(tokens()).alias("word")).filter(F.length("word") >= 2)
     pairs = words.select(
         F.explode(
             F.expr("transform(sequence(1, length(word) - 1), i -> substring(word, i, 2))")
@@ -1232,7 +1228,7 @@ _BPE_MERGE_SQL = f"""
 SELECT pair, CAST(COUNT(*) AS BIGINT) AS n
 FROM (
   SELECT substring(word, CAST(i AS INTEGER), 2) AS pair
-  FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents) w,
+  FROM (SELECT unnest({sql_tokens()}) AS word FROM documents) w,
        LATERAL unnest(range(1, length(word))) AS t(i)
   WHERE length(word) >= 2)
 GROUP BY pair
@@ -1284,7 +1280,7 @@ def _bpe_induct(spark: SparkSession, sf_dir: str):
     tokenizer `bpe_compression_by_lang` applies back to the corpus."""
     docs = _docs_table(spark, sf_dir)
     vocab = (
-        docs.select(F.explode(_tokens()).alias("word"))
+        docs.select(F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wn"))
@@ -1368,7 +1364,7 @@ def bpe_compression_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words = (
         _docs_table(spark, sf_dir)
-        .select("lang", F.explode(_tokens()).alias("word"))
+        .select("lang", F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
     )
     agg = words.join(F.broadcast(lut), "word").groupBy("lang").agg(
@@ -1407,7 +1403,7 @@ def _sql_bpe_chain() -> str:
     ctes = [
         f"""v0 AS MATERIALIZED (
   SELECT word, regexp_replace(word, '(.)', '{s}\\1{s}', 'g') AS rep, COUNT(*) AS wn
-  FROM (SELECT unnest({_SQL_TOKENS}) AS word FROM documents) w
+  FROM (SELECT unnest({sql_tokens()}) AS word FROM documents) w
   WHERE word <> ''
   GROUP BY word)"""
     ]
@@ -1458,7 +1454,7 @@ lut AS (
          length(word) AS n_chars_w
   FROM v{k}),
 w AS (
-  SELECT lang, unnest({_SQL_TOKENS}) AS word FROM documents),
+  SELECT lang, unnest({sql_tokens()}) AS word FROM documents),
 j AS (
   SELECT lang, n_syms, n_chars_w FROM w JOIN lut USING (word) WHERE word <> '')
 SELECT lang,
@@ -1494,7 +1490,7 @@ def token_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject.
     """
     docs = _docs_table(spark, sf_dir)
-    toks = docs.select(_tokens().alias("toks"))
+    toks = docs.select(tokens().alias("toks"))
     # sequence(1, 0) guard (see _BIGRAMS): single-token docs have no bigrams
     bigrams = toks.filter(F.size("toks") >= 2).select(
         F.explode(
@@ -1535,7 +1531,7 @@ WITH bigrams AS (
   SELECT b.w1, b.w2 FROM (
     SELECT unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
              i -> struct_pack(w1 := toks[i], w2 := toks[i + 1]))) AS b
-    FROM (SELECT {_SQL_TOKENS} AS toks FROM documents) base) t),
+    FROM (SELECT {sql_tokens()} AS toks FROM documents) base) t),
 nt AS (SELECT COUNT(*) AS n_total FROM bigrams),
 pc AS (SELECT w1, w2, COUNT(*) AS n_ab FROM bigrams GROUP BY 1, 2),
 uni AS (
@@ -1576,7 +1572,7 @@ def oov_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = _docs_table(spark, sf_dir)
     toks = docs.select(
-        "source", F.explode(_tokens()).alias("token")
+        "source", F.explode(tokens()).alias("token")
     ).filter(F.length("token") >= 1)
     vocab = (
         toks.groupBy("token")
@@ -1604,7 +1600,7 @@ def oov_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OOV_SQL = f"""
 WITH toks AS (
   SELECT source, token FROM (
-    SELECT source, unnest({_SQL_TOKENS}) AS token FROM documents) t
+    SELECT source, unnest({sql_tokens()}) AS token FROM documents) t
   WHERE length(token) >= 1),
 vocab AS (
   SELECT token FROM (
@@ -1647,7 +1643,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
     freqs = (
         docs.filter(F.trim(F.col("text")) != "")
-        .select(F.explode(_tokens()).alias("token"))
+        .select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1716,7 +1712,7 @@ def _sql_vocab_coverage() -> str:
     return f"""
 WITH freqs AS (
   SELECT token, COUNT(*) AS n FROM (
-    SELECT unnest({_SQL_TOKENS}) AS token
+    SELECT unnest({sql_tokens()}) AS token
     FROM documents WHERE trim(text) <> '') t
   GROUP BY token),
 totals AS (
@@ -1764,7 +1760,7 @@ def training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_table(spark, sf_dir)
     shard = (portable_hash(F.col("doc_id").cast("string")) % N_SHARDS).alias("shard")
-    n_tok = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(_tokens()))
+    n_tok = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(F.size(tokens()))
     return (
         docs.select(shard, n_tok.alias("n_tok"), "n_chars")
         .groupBy("shard")
@@ -1781,7 +1777,7 @@ _SHARDS_SQL = f"""
 SELECT CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % {N_SHARDS}
          AS shard,
        CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(CASE WHEN trim(text) = '' THEN 0 ELSE len({_SQL_TOKENS}) END) AS BIGINT)
+       CAST(SUM(CASE WHEN trim(text) = '' THEN 0 ELSE len({sql_tokens()}) END) AS BIGINT)
          AS n_tokens,
        CAST(SUM(n_chars) AS BIGINT) AS sum_chars
 FROM documents
@@ -1814,7 +1810,7 @@ def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs_table(spark, sf_dir)
     freqs = (
         docs.filter(F.trim(F.col("text")) != "")
-        .select(F.explode(_tokens()).alias("token"))
+        .select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -1872,7 +1868,7 @@ def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ZIPF_SQL = f"""
 WITH freqs AS (
   SELECT token, COUNT(*) AS freq FROM (
-    SELECT unnest({_SQL_TOKENS}) AS token
+    SELECT unnest({sql_tokens()}) AS token
     FROM documents WHERE trim(text) <> '') t
   GROUP BY token),
 totals AS (SELECT SUM(freq) AS n_token_mass, COUNT(*) AS vocab_size FROM freqs),

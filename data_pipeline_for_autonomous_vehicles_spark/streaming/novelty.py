@@ -249,10 +249,11 @@ def corpus_boiler_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller, like the band index — at 100 TB this is a persisted table
     bucketed by digest."""
     from ..catalog import load_table
-    from ..operators.corpus import _boiler_digests, _nonempty, _segment_rows, _toks
+    from ..functions.scalars import tokens
+    from ..operators.corpus import _boiler_digests, _nonempty, _segment_rows
 
     docs = _nonempty(load_table(spark, sf_dir, "documents")).filter(~_is_delta())
-    segs = _segment_rows(docs.select("doc_id", _toks().alias("toks")))
+    segs = _segment_rows(docs.select("doc_id", tokens().alias("toks")))
     return _boiler_digests(segs)
 
 
@@ -270,11 +271,12 @@ def boilerplate_gate_frame(batch_docs: DataFrame, boiler_index: DataFrame) -> Da
     delta-minted remainder. This split (causal gate + batch reconcile) is
     the production shape; the pytest pins gate ≡ the probe's `known`
     component exactly."""
-    from ..operators.corpus import _nonempty, _segment_rows, _toks
+    from ..functions.scalars import tokens
+    from ..operators.corpus import _nonempty, _segment_rows
 
     from ..functions.scalars import round_half_up
 
-    base = _nonempty(batch_docs).select("doc_id", _toks().alias("toks"))
+    base = _nonempty(batch_docs).select("doc_id", tokens().alias("toks"))
     segs = _segment_rows(base)
     flagged = segs.join(
         boiler_index.withColumn("boiler", F.lit(1)), "digest", "left"

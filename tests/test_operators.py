@@ -3,9 +3,13 @@ that complement the differential oracle harness (tools/check_oracle.py)."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_for_autonomous_vehicles_spark.catalog import load_table
+from data_pipeline_for_autonomous_vehicles_spark.functions.scalars import tokens
 from data_pipeline_for_autonomous_vehicles_spark.operators import (
     dedup,
     similarity,
@@ -149,23 +153,82 @@ def test_connected_components_hand_graph(spark):
     assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 8: 8, 10: 10, 11: 10, 12: 10}
 
 
-def test_connected_components_long_chain_crosses_stats_reset(spark):
-    """A 400-node path graph needs more than STATS_RESET_EVERY rounds even
-    with pointer jumping, so the loop crosses at least one parquet
-    stats-reset flush (the round-7 fix for Catalyst's per-round
-    sizeInBytes squaring) — labels must still converge to the path's min
-    id, and the reversed id order exercises propagation both ways."""
-    n = 400
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "a long, b long"
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long")
-    got = {
-        r["node"]: r["label"]
-        for r in dedup.connected_components(edges, nodes).collect()
+def _cc_shape_graphs(n: int = 2000) -> dict[str, list[tuple[int, int]]]:
+    """Graph shapes the registry tables do not produce: a path and a forest
+    under shuffled ids, and a star whose hub holds the largest id."""
+    rng = random.Random(7)
+    ids = list(range(1, n + 1))
+    rng.shuffle(ids)
+    return {
+        "path": [(ids[i], ids[i + 1]) for i in range(n - 1)],
+        "star": [(n, i) for i in range(1, n)],
+        # 40 trees: every node but each 50th attaches to an earlier one
+        "forest": [
+            (ids[rng.randrange(i)], ids[i]) for i in range(1, n) if i % 50
+        ],
     }
-    assert got == {i: 1 for i in range(1, n + 1)}
-    assert dedup.CC_MAX_ITER > dedup.STATS_RESET_EVERY  # flush actually reachable
+
+
+def _min_id_labels(edges: list[tuple[int, int]], n: int) -> dict[int, int]:
+    parent = list(range(n + 1))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {i: find(i) for i in range(1, n + 1)}
+
+
+# Union-find rounds per (config, graph) with EDGES_PER_TASK = 64. Adaptive
+# execution coalesces the small edge set into one partition, so one task
+# sees every edge; with it off, 64 shuffle partitions coalesce to 32 tasks.
+_CC_ROUNDS = {
+    ("default", "path"): 1,
+    ("default", "star"): 1,
+    ("default", "forest"): 1,
+    ("no_aqe", "path"): 6,
+    ("no_aqe", "star"): 2,
+    ("no_aqe", "forest"): 5,
+}
+
+
+@pytest.mark.parametrize("config", ["default", "no_aqe"])
+@pytest.mark.parametrize("shape", ["path", "star", "forest"])
+def test_connected_components_shapes(spark, monkeypatch, config, shape):
+    """Exact min-id labels on adversarial shapes in a pinned number of
+    rounds: the bound is set to the expected count, so one round more
+    raises."""
+    n = 2000
+    edges = _cc_shape_graphs(n)[shape]
+    monkeypatch.setattr(dedup, "EDGES_PER_TASK", 64)
+    monkeypatch.setattr(dedup, "_cc_round_bound", lambda m: _CC_ROUNDS[config, shape])
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "64"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        if config == "no_aqe":
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+        got = dedup.connected_components(
+            spark.createDataFrame(edges, "a long, b long"),
+            spark.createDataFrame([(i,) for i in range(1, n + 1)], "node long"),
+        ).collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert {r["node"]: r["label"] for r in got} == _min_id_labels(edges, n)
+
+
+def test_connected_components_raises_past_bound(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_cc_round_bound", lambda m: 0)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    nodes = spark.createDataFrame([(n,) for n in (1, 2, 3)], "node long")
+    with pytest.raises(RuntimeError, match=r"round 1 exceeds the bound of 0 rounds"):
+        dedup.connected_components(edges, nodes)
 
 
 def test_grouping_sets_union_of_single_groupbys(spark, sf_dir):
@@ -1285,7 +1348,7 @@ def test_cms_overestimates_and_merges(spark, sf_dir):
         assert r["overestimate"] == r["cms_n"] - r["exact_n"]
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(frequency._doc_tokens()).alias("token")).filter(
+    toks = docs.select(F.explode(tokens()).alias("token")).filter(
         F.length("token") >= 1
     )
     grid = F.array(
@@ -1307,8 +1370,8 @@ def test_cms_overestimates_and_merges(spark, sf_dir):
     full = sketch(toks)
     docs_a = docs.filter(F.col("doc_id") % 2 == 0)
     docs_b = docs.filter(F.col("doc_id") % 2 == 1)
-    half_a = sketch(docs_a.select(F.explode(frequency._doc_tokens()).alias("token")).filter(F.length("token") >= 1))
-    half_b = sketch(docs_b.select(F.explode(frequency._doc_tokens()).alias("token")).filter(F.length("token") >= 1))
+    half_a = sketch(docs_a.select(F.explode(tokens()).alias("token")).filter(F.length("token") >= 1))
+    half_b = sketch(docs_b.select(F.explode(tokens()).alias("token")).filter(F.length("token") >= 1))
     merged = dict(half_a)
     for k, v in half_b.items():
         merged[k] = merged.get(k, 0) + v
@@ -1426,7 +1489,7 @@ def test_oov_share_consistent(spark, sf_dir):
         assert 0.0 <= r["oov_share"] <= 1.0
     docs = load_table(spark, sf_dir, "documents")
     total_tokens = (
-        docs.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("t"))
+        docs.select(F.explode(tokens()).alias("t"))
         .filter(F.length("t") >= 1)
         .count()
     )
