@@ -63,19 +63,15 @@ def refresh_rollup(
     src = events
     if days is not None:
         src = events.filter(F.to_date("ts").isin(days))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            hourly_rollup_frame(src)
-            .repartition(F.col("day"))
-            .sortWithinPartitions("bucket_h", "user_id")
-            .write.partitionBy("day")
-            .mode("overwrite")
-            .parquet(rollup_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        hourly_rollup_frame(src)
+        .repartition(F.col("day"))
+        .sortWithinPartitions("bucket_h", "user_id")
+        .write.partitionBy("day")
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(rollup_path)
+    )
 
 
 def serve_hourly(

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,8 +29,33 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# path → (st_mtime_ns, st_size, the parquet schema Spark inferred for that version)
+_SCHEMAS: dict[str, tuple[int, int, StructType]] = {}
+
+
+def _schema(spark: SparkSession, path: str) -> StructType:
+    """The file's inferred schema, inferred (one Spark job) only on the
+    first load of each version of the file. A rewrite changes the mtime
+    or size, so it is inferred afresh. A path the local file system does
+    not know (missing, or on a remote store) is inferred on every load,
+    so Spark reports a missing table as it always has."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path).schema
+    version = (st.st_mtime_ns, st.st_size)
+    known = _SCHEMAS.get(path)
+    if known is not None and known[:2] == version:
+        return known[2]
+    # concurrent first loads may both infer; they store the same schema
+    schema = spark.read.parquet(path).schema
+    _SCHEMAS[path] = (*version, schema)
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table. Pure parquet scan — no caching, no inference."""
+    """Load one test table. Pure parquet scan — no caching, and no schema
+    inference job once the file's schema is known (see `_schema`)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # UTC is load-bearing for oracle parity: date_trunc/to_date/timestamp
@@ -47,7 +73,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # runtime-settable; applied here so externally created sessions
         # (the driver's) read the nanos file correctly too
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # ts is TIMESTAMP(NANOS) in the file; with nanosAsLong it scans as
         # int64 nanos. Integer DIV (not float /: ns epochs ≈ 1.7e18 exceed

@@ -4,10 +4,14 @@ The reference dashboard fires 9 independent SQL queries per 5-second
 refresh, each opening a fresh connection and re-scanning storage
 (src/visualization/dashboard.py:60-68, src/metrics/queries.py:16-24). The
 engine equivalent loads the events table ONCE per refresh and builds every
-metric frame from that one DataFrame. The time-window filter is applied
-once, the windowed slice is cached, and every windowed metric plan reads
-the cache (Spark plan-matches the cached fragment), so storage is scanned
-once per refresh instead of nine times.
+metric frame from that one DataFrame. Two caches are registered, lazily:
+the windowed slice, and the per-vehicle rollup over it
+(`metrics._vehicle_rollup`) that five of the frames project. Every
+windowed metric plan reads one of them (Spark plan-matches the cached
+fragment when the frame's plan is built), so storage is scanned for the
+window once per refresh instead of nine times, and the five rollup frames
+share one aggregation. Nothing is materialized up front: the first frame
+to run fills each cache while the others wait on its blocks, then read it.
 
 `chart_frames` is the render edge: it builds each frame and collects it
 with `.toPandas()` on its own thread, so the nine small plans (a few
@@ -34,9 +38,11 @@ from .operators import metrics
 
 def _load_events(spark: SparkSession, sf_dir: str, hours: int, as_of: str) -> DataFrame:
     """The refresh's one load of the events table, with its windowed slice
-    cached and materialized for every windowed metric to read."""
+    and the per-vehicle rollup over it registered as (lazy) caches for the
+    windowed metrics to read."""
     events = load_table(spark, sf_dir, "events")
-    register_plan_cache(metrics._win(events, hours, as_of).cache()).count()
+    win = register_plan_cache(metrics._win(events, hours, as_of).cache())
+    register_plan_cache(metrics._vehicle_rollup(win).cache())
     return events
 
 
@@ -67,12 +73,13 @@ def dashboard_snapshot(
     vehicle_id: int | None = None,
 ) -> dict[str, DataFrame]:
     """The nine chart metrics plus the sidebar's vehicle list for one
-    refresh, all built from one load of the events table and sharing one
-    cached scan of its windowed slice. Returns name → DataFrame; call
-    `.toPandas()` per frame at the render edge.
+    refresh, all built from one load of the events table and sharing the
+    cached windowed slice and per-vehicle rollup. Returns name → DataFrame;
+    call `.toPandas()` per frame at the render edge.
 
-    The window cache lives until `release(spark)` (or Spark's LRU evicts
-    it); call it when the refresh cycle is done.
+    The caches fill when the first frame that reads them runs, and live
+    until `release(spark)` (or Spark's LRU evicts them); call it when the
+    refresh cycle is done.
     """
     events = _load_events(spark, sf_dir, hours, as_of)
     builders = _frame_builders(events, hours, as_of, vehicle_id)
@@ -82,10 +89,10 @@ def dashboard_snapshot(
 
 
 def release(spark: SparkSession) -> int:
-    """Drop the refresh's window cache, with every other registered plan
-    cache (`caching.release_plan_caches`, process-wide, so `spark` is not
-    needed); caches the caller persisted itself stay. Returns how many
-    were released."""
+    """Drop the refresh's window and rollup caches, with every other
+    registered plan cache (`caching.release_plan_caches`, process-wide, so
+    `spark` is not needed); caches the caller persisted itself stay.
+    Returns how many were released."""
     return release_plan_caches()
 
 
@@ -117,12 +124,13 @@ def chart_frames(
     All aggregation stays in-engine over one load of the events table and
     one cached windowed scan; only the final bounded frames cross to pandas
     — the sole driver-side collect in the dashboard path, matching
-    SURVEY.md §3.1's "collect only at the visualization edge" rule. Once
-    the window is cached, each of the nine frames is built and collected in
-    its own thread; `inheritable_thread_target` gives every thread the
-    caller's job group and local properties, so the refresh's jobs are
-    attributed and cancelled as one. The exception of the first failed
-    frame (in table order) propagates once every thread has finished.
+    SURVEY.md §3.1's "collect only at the visualization edge" rule. Each of
+    the nine frames is built and collected in its own thread; the first to
+    read the window (or rollup) cache fills it, the rest wait and read it.
+    `inheritable_thread_target` gives every thread the caller's job group
+    and local properties, so the refresh's jobs are attributed and
+    cancelled as one. The exception of the first failed frame (in table
+    order) propagates once every thread has finished.
     """
     events = _load_events(spark, sf_dir, hours, as_of)
     builders = _frame_builders(events, hours, as_of, vehicle_id)

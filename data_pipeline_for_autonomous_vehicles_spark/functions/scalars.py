@@ -112,13 +112,12 @@ def nullif_zero(col: Column) -> Column:
     return F.when(col == 0, F.lit(None)).otherwise(col)
 
 
-def clamped_span(col: Column | str) -> Column:
-    """GREATEST(0, COALESCE(MAX(x),0) - COALESCE(MIN(x),0)) — the odometer
-    span clamp (reference: src/metrics/queries.py:136,166,195)."""
-    c = F.col(col) if isinstance(col, str) else col
+def clamped_span(hi: Column, lo: Column) -> Column:
+    """GREATEST(0, COALESCE(hi,0) - COALESCE(lo,0)) over a column's MAX and
+    MIN — the odometer span clamp (reference:
+    src/metrics/queries.py:136,166,195)."""
     return F.greatest(
-        F.lit(0.0),
-        F.coalesce(F.max(c), F.lit(0.0)) - F.coalesce(F.min(c), F.lit(0.0)),
+        F.lit(0.0), F.coalesce(hi, F.lit(0.0)) - F.coalesce(lo, F.lit(0.0))
     )
 
 

@@ -133,20 +133,16 @@ def compact_partitions(
         F.xxhash64(*data_cols),
         F.element_at(slot_map, F.col(partition_col).cast("string")),
     ).alias("_slot")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.withColumn("_slot", slot)
-            .repartition(F.col(partition_col), F.col("_slot"))
-            .drop("_slot")
-            .sortWithinPartitions(partition_col, *sort_cols)
-            .write.partitionBy(partition_col)
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        df.withColumn("_slot", slot)
+        .repartition(F.col(partition_col), F.col("_slot"))
+        .drop("_slot")
+        .sortWithinPartitions(partition_col, *sort_cols)
+        .write.partitionBy(partition_col)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
     return plan
 
 
@@ -218,18 +214,14 @@ def merge_upsert(
         latest = latest.filter(
             F.coalesce(F.col(op_col), F.lit("")) != F.lit("D")
         ).drop(op_col)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            latest.repartition(F.col(PARTITION_COL))
-            .sortWithinPartitions(PARTITION_COL, *key_cols)
-            .write.partitionBy(PARTITION_COL)
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        latest.repartition(F.col(PARTITION_COL))
+        .sortWithinPartitions(PARTITION_COL, *key_cols)
+        .write.partitionBy(PARTITION_COL)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
     return changed
 
 

@@ -12,9 +12,11 @@ al.), which is untestable against an oracle — our operators take an explicit
 data's January-2024 span.
 
 Scale notes: every metric is a single hash-aggregation on user_id (shuffles
-once on the group key); the join-of-aggregates metrics (J1 shape,
-queries.py:90-110) join two already-aggregated sides — post-agg cardinality
-is |vehicles|, so AQE converts the join to broadcast at runtime. The ts
+once on the group key). The reference's join-of-aggregates metrics (J1
+shape, queries.py:90-110: a telemetry aggregate LEFT JOIN an event-count
+aggregate) and its fleet rollup (J2) are projections of one conditional
+per-vehicle rollup, ``_vehicle_rollup``: one aggregation, no join. The
+dashboard caches that rollup, so its five frames share one shuffle. The ts
 window predicate is pushed into the parquet scan (at production scale the
 table would be written partitionBy(date) so the same predicate prunes
 partitions — see sources/sinks).
@@ -42,6 +44,7 @@ DEFAULT_HOURS = 360  # 15 days → strict, non-empty subset of the data
 TELEMETRY_TYPE = "view"  # value plays the odometer/speed role
 INTERVENTION_TYPE = "error"
 DISENGAGEMENT_TYPE = "click"
+ENGAGED_THRESHOLD = 50.0  # value > 50 plays the autopilot_engaged role
 
 
 def _win(df: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF) -> DataFrame:
@@ -111,39 +114,34 @@ RISK_VALUE = 10.0  # strict >  (consumer.py:114)
 
 
 def derive_alerts(events: DataFrame) -> DataFrame:
-    """Union of the three rule outputs, one alert row per triggering event.
+    """One alert row per triggering event: one filter on the three rules,
+    then one CASE projection. The rules are disjoint (speed and battery
+    bound telemetry values from opposite sides, risk reads interventions),
+    so an event raises at most one alert and the input is scanned once —
+    a streaming micro-batch reads its source once, not once per rule.
 
     Messages use %.2f/%d only: both are tie-free across JVM String.format
     and C printf, so the DuckDB oracle twin is byte-identical.
     """
-    telemetry = events.filter(F.col("event_type") == TELEMETRY_TYPE)
-    speed = telemetry.filter(F.col("value") > SPEED_LIMIT).select(
+    vehicle, value = F.col("user_id"), F.col("value")
+    telemetry = F.col("event_type") == TELEMETRY_TYPE
+    speed = telemetry & (value > SPEED_LIMIT)
+    battery = telemetry & (value < LOW_BATTERY)
+    risk = (F.col("event_type") == INTERVENTION_TYPE) & (value > RISK_VALUE)
+    return events.filter(speed | battery | risk).select(
         F.col("ts").alias("time"),
-        F.col("user_id").alias("vehicle_id"),
-        F.lit("Speed Violation").alias("alert_type"),
-        F.format_string(
-            "Vehicle %d exceeded speed limit (%.2f km/h)", F.col("user_id"), F.col("value")
-        ).alias("alert_message"),
+        vehicle.alias("vehicle_id"),
+        F.when(speed, F.lit("Speed Violation"))
+        .when(battery, F.lit("Low Battery"))
+        .otherwise(F.lit("Collision Risk"))
+        .alias("alert_type"),
+        F.when(
+            speed, F.format_string("Vehicle %d exceeded speed limit (%.2f km/h)", vehicle, value)
+        )
+        .when(battery, F.format_string("Vehicle %d battery low (%.2f%%)", vehicle, value))
+        .otherwise(F.format_string("Vehicle %d collision risk (severity %.2f)", vehicle, value))
+        .alias("alert_message"),
     )
-    battery = telemetry.filter(F.col("value") < LOW_BATTERY).select(
-        F.col("ts").alias("time"),
-        F.col("user_id").alias("vehicle_id"),
-        F.lit("Low Battery").alias("alert_type"),
-        F.format_string(
-            "Vehicle %d battery low (%.2f%%)", F.col("user_id"), F.col("value")
-        ).alias("alert_message"),
-    )
-    risk = events.filter(
-        (F.col("event_type") == INTERVENTION_TYPE) & (F.col("value") > RISK_VALUE)
-    ).select(
-        F.col("ts").alias("time"),
-        F.col("user_id").alias("vehicle_id"),
-        F.lit("Collision Risk").alias("alert_type"),
-        F.format_string(
-            "Vehicle %d collision risk (severity %.2f)", F.col("user_id"), F.col("value")
-        ).alias("alert_message"),
-    )
-    return speed.unionByName(battery).unionByName(risk)
 
 
 _ALERTS_SQL_BODY = f"""
@@ -267,6 +265,39 @@ ORDER BY vehicle_id
 """
 
 
+# --- the per-vehicle rollup behind metrics 5, 7 and 8 ----------------------
+
+
+def _vehicle_rollup(win: DataFrame) -> DataFrame:
+    """One conditional aggregation per vehicle over the windowed events,
+    the columns every J1/J2/A6 metric reads: telemetry count, max and min
+    of value, engaged telemetry rows, intervention and disengagement
+    counts. The metrics project it (and filter to one vehicle after it),
+    so the dashboard's cached rollup serves all five of them."""
+    telemetry = F.col("event_type") == TELEMETRY_TYPE
+    tele_value = F.when(telemetry, F.col("value"))
+    engaged = F.when(F.col("value") > ENGAGED_THRESHOLD, 1).otherwise(0)
+    return win.groupBy(F.col("user_id").alias("vehicle_id")).agg(
+        F.count(F.when(telemetry, 1)).alias("n_tele"),
+        F.max(tele_value).alias("tele_max"),
+        F.min(tele_value).alias("tele_min"),
+        F.sum(F.when(telemetry, engaged)).alias("engaged"),
+        F.count(F.when(F.col("event_type") == INTERVENTION_TYPE, 1)).alias("n_interv"),
+        F.count(F.when(F.col("event_type") == DISENGAGEMENT_TYPE, 1)).alias("n_diseng"),
+    )
+
+
+def _vehicle_rows(
+    events: DataFrame, hours: int, as_of: str, vehicle_id: int | None = None
+) -> DataFrame:
+    """The rollup's rows of vehicles with telemetry in the window (the
+    telemetry side of the reference's LEFT joins), optionally one vehicle."""
+    rollup = _vehicle_rollup(_win(events, hours, as_of)).filter(F.col("n_tele") > 0)
+    if vehicle_id is not None:
+        rollup = rollup.filter(F.col("vehicle_id") == vehicle_id)
+    return rollup
+
+
 # --- 5. km per intervention (queries.py:86-110: J1+A2) ---------------------
 
 
@@ -286,30 +317,16 @@ def km_per_intervention_frame(
     vehicle_id: int | None = None,
     as_of: str = AS_OF,
 ) -> DataFrame:
-    """LEFT join of two per-vehicle aggregates: distance span ⋈ intervention
-    count; NULL (not 0) when interventions = 0 (queries.py:106-107)."""
-    ev = _win(events, hours, as_of)
-    if vehicle_id is not None:
-        ev = ev.filter(F.col("user_id") == vehicle_id)
-    dist = (
-        ev.filter(F.col("event_type") == TELEMETRY_TYPE)
-        .groupBy(F.col("user_id").alias("vehicle_id"))
-        .agg((F.max("value") - F.min("value")).alias("km_driven"))
-    )
-    interv = (
-        ev.filter(F.col("event_type") == INTERVENTION_TYPE)
-        .groupBy(F.col("user_id").alias("vehicle_id"))
-        .agg(F.count(F.lit(1)).alias("interventions"))
-    )
-    joined = dist.join(interv, "vehicle_id", "left")
-    n = F.coalesce(F.col("interventions"), F.lit(0))
-    return joined.select(
+    """Distance span and intervention count of every vehicle with
+    telemetry (the reference's LEFT join of two aggregates); NULL (not 0)
+    when interventions = 0 (queries.py:106-107)."""
+    n = F.col("n_interv")
+    km = F.col("tele_max") - F.col("tele_min")
+    return _vehicle_rows(events, hours, as_of, vehicle_id).select(
         "vehicle_id",
-        "km_driven",
+        km.alias("km_driven"),
         n.alias("interventions"),
-        round_half_up(F.col("km_driven") / nullif_zero(n).cast("double"), 4).alias(
-            "km_per_intervention"
-        ),
+        round_half_up(km / nullif_zero(n).cast("double"), 4).alias("km_per_intervention"),
     ).orderBy("vehicle_id")
 
 
@@ -331,30 +348,17 @@ ORDER BY d.vehicle_id
 """
 
 
-def _rate_per_100km(events: DataFrame, event_type: str, hours: int, as_of: str) -> DataFrame:
+def _rate_per_100km(events: DataFrame, count_col: str, hours: int, as_of: str) -> DataFrame:
     """Shared J1 shape for intervention/disengagement rate per 100 km
     (queries.py:134-157 and :164-187): clamped odometer span, event count,
     rate = events / (km/100)."""
-    ev = _win(events, hours, as_of)
-    dist = (
-        ev.filter(F.col("event_type") == TELEMETRY_TYPE)
-        .groupBy(F.col("user_id").alias("vehicle_id"))
-        .agg(clamped_span("value").alias("km_driven"))
-    )
-    cnt = (
-        ev.filter(F.col("event_type") == event_type)
-        .groupBy(F.col("user_id").alias("vehicle_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-    joined = dist.join(cnt, "vehicle_id", "left")
-    n = F.coalesce(F.col("n_events"), F.lit(0))
-    return joined.select(
+    n = F.col(count_col)
+    km = clamped_span(F.col("tele_max"), F.col("tele_min"))
+    return _vehicle_rows(events, hours, as_of).select(
         "vehicle_id",
-        "km_driven",
+        km.alias("km_driven"),
         n.alias("n_events"),
-        round_half_up(
-            n.cast("double") / nullif_zero(F.col("km_driven") / F.lit(100.0)), 4
-        ).alias("rate_per_100km"),
+        round_half_up(n.cast("double") / nullif_zero(km / F.lit(100.0)), 4).alias("rate_per_100km"),
     ).orderBy("vehicle_id")
 
 
@@ -387,7 +391,7 @@ def intervention_rate(
 def intervention_rate_frame(
     events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
-    return _rate_per_100km(events, INTERVENTION_TYPE, hours, as_of)
+    return _rate_per_100km(events, "n_interv", hours, as_of)
 
 
 def disengagement_rate(
@@ -399,7 +403,7 @@ def disengagement_rate(
 def disengagement_rate_frame(
     events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
-    return _rate_per_100km(events, DISENGAGEMENT_TYPE, hours, as_of)
+    return _rate_per_100km(events, "n_diseng", hours, as_of)
 
 
 # --- 6. perception summary (queries.py:113-129: A5) ------------------------
@@ -460,21 +464,17 @@ def fleet_summary_frame(
     events: DataFrame, hours: int = DEFAULT_HOURS, as_of: str = AS_OF
 ) -> DataFrame:
     """Single-row fleet rollup: total km, total interventions, km/intervention.
-    The reference stitches three scalar subqueries (queries.py:193-203); here
-    both aggregates reduce to 1-row DataFrames and cross-join — Catalyst
-    executes them as broadcast nested loop over single rows."""
-    ev = _win(events, hours, as_of)
-    per_vehicle = (
-        ev.filter(F.col("event_type") == TELEMETRY_TYPE)
-        .groupBy("user_id")
-        .agg(clamped_span("value").alias("km"))
+    The reference stitches three scalar subqueries (queries.py:193-203);
+    here one global aggregate over the per-vehicle rollup gives all of
+    them. Only vehicles with telemetry contribute km, so a window without
+    telemetry gives NULL km; an empty window gives (NULL, 0, NULL)."""
+    km = F.when(F.col("n_tele") > 0, clamped_span(F.col("tele_max"), F.col("tele_min")))
+    totals = _vehicle_rollup(_win(events, hours, as_of)).agg(
+        # exact scaled sum: order-independent across partitions AND engines
+        round_half_up(exact_sum(km, 2), 4).alias("total_km"),
+        F.coalesce(F.sum("n_interv"), F.lit(0)).alias("total_interventions"),
     )
-    # exact scaled sum: order-independent across partitions AND engines
-    total_km = per_vehicle.agg(round_half_up(exact_sum("km", 2), 4).alias("total_km"))
-    interv = ev.filter(F.col("event_type") == INTERVENTION_TYPE).agg(
-        F.count(F.lit(1)).alias("total_interventions")
-    )
-    return total_km.crossJoin(interv).select(
+    return totals.select(
         "total_km",
         "total_interventions",
         round_half_up(
@@ -502,8 +502,6 @@ FROM tot, iv
 
 # --- 8. autopilot engagement (queries.py:207-223: A6) ----------------------
 
-ENGAGED_THRESHOLD = 50.0  # value > 50 plays the autopilot_engaged role
-
 
 def autopilot_engagement(
     spark: SparkSession,
@@ -523,22 +521,15 @@ def autopilot_engagement_frame(
 ) -> DataFrame:
     """SUM(CASE WHEN engaged THEN 1 ELSE 0 END) / NULLIF(COUNT,0) ratio,
     CAST(FLOOR((·) * 100.0 + 0.5) AS DOUBLE) / 100.0 — the conditional-aggregate shape of queries.py:210-223."""
-    ev = _win(events, hours, as_of).filter(F.col("event_type") == TELEMETRY_TYPE)
-    if vehicle_id is not None:
-        ev = ev.filter(F.col("user_id") == vehicle_id)
-    engaged = F.sum(F.when(F.col("value") > ENGAGED_THRESHOLD, 1).otherwise(0))
-    total = F.count(F.lit(1))
-    return (
-        ev.groupBy(F.col("user_id").alias("vehicle_id"))
-        .agg(
-            engaged.alias("engaged_rows"),
-            total.alias("total_rows"),
-            round_half_up(
-                F.lit(100.0) * engaged.cast("double") / nullif_zero(total).cast("double"), 2
-            ).alias("engagement_pct"),
-        )
-        .orderBy("vehicle_id")
-    )
+    engaged, total = F.col("engaged"), F.col("n_tele")
+    return _vehicle_rows(events, hours, as_of, vehicle_id).select(
+        "vehicle_id",
+        engaged.alias("engaged_rows"),
+        total.alias("total_rows"),
+        round_half_up(
+            F.lit(100.0) * engaged.cast("double") / nullif_zero(total).cast("double"), 2
+        ).alias("engagement_pct"),
+    ).orderBy("vehicle_id")
 
 
 _AUTOPILOT_SQL = f"""

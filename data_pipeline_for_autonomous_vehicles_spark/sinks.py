@@ -162,18 +162,13 @@ def append_stream_exactly_once(
     (`maintenance.compact_partitions`) folds old batch dirs into the
     steady-state date layout.
     """
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            batch_df.withColumn(PARTITION_COL, F.to_date(F.col(time_col)))
-            .withColumn("batch_id", F.lit(int(batch_id)))
-            .repartition(F.col(PARTITION_COL))
-            .sortWithinPartitions(PARTITION_COL, *sort_cols)
-            .write.partitionBy("batch_id", PARTITION_COL)
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (
+        batch_df.withColumn(PARTITION_COL, F.to_date(F.col(time_col)))
+        .withColumn("batch_id", F.lit(int(batch_id)))
+        .repartition(F.col(PARTITION_COL))
+        .sortWithinPartitions(PARTITION_COL, *sort_cols)
+        .write.partitionBy("batch_id", PARTITION_COL)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )

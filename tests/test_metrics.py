@@ -19,7 +19,7 @@ def _ev(event_id, minutes, user_id, event_type, value):
         ts=T0 + dt.timedelta(minutes=minutes),
         user_id=user_id,
         event_type=event_type,
-        value=float(value),
+        value=None if value is None else float(value),
         props="{}",
     )
 
@@ -32,6 +32,8 @@ def fixture_dir(spark, tmp_path_factory):
     - user 3: interventions but NO telemetry → absent from J1 left side
     - user 4: odometer regress (span clamps to 0 in rate metrics)
     - threshold rows: value exactly 65 (not violation), 19.999 (low), 10 (not risk)
+    - user 6: one telemetry value NULL, one 30 (span 0), one disengagement
+    - user 7: telemetry whose only value is NULL
     """
     rows = [
         _ev(1, 0, 1, "view", 100.0),
@@ -48,6 +50,10 @@ def fixture_dir(spark, tmp_path_factory):
         _ev(12, 40, 5, "view", 65.0),  # exactly at speed limit → NOT a violation
         _ev(13, 41, 5, "view", 19.999),  # below 20 → Low Battery
         _ev(14, 42, 5, "error", 10.0),  # exactly 10 → NOT collision risk
+        _ev(15, 50, 6, "view", None),
+        _ev(16, 51, 6, "view", 30.0),
+        _ev(17, 52, 6, "click", 5.0),
+        _ev(18, 53, 7, "view", None),
     ]
     d = tmp_path_factory.mktemp("fixture_sf")
     spark.createDataFrame(rows).coalesce(1).write.mode("overwrite").parquet(
@@ -57,6 +63,8 @@ def fixture_dir(spark, tmp_path_factory):
 
 
 AS_OF = "2024-01-21 00:00:00"
+EMPTY_AS_OF = "2024-03-01 00:00:00"  # its 24 h window holds no fixture row
+ABSENT_VEHICLE = 99
 
 
 def test_km_per_intervention_null_when_zero_events(spark, fixture_dir):
@@ -74,6 +82,12 @@ def test_km_per_intervention_null_when_zero_events(spark, fixture_dir):
     assert out[2]["km_per_intervention"] is None
     # interventions without telemetry → not present (LEFT join keeps dist side)
     assert 3 not in out
+    # MAX/MIN skip the NULL value; a vehicle with only NULL values has no span
+    assert out[6]["km_driven"] == 0.0
+    assert out[7]["km_driven"] is None
+    assert metrics.km_per_intervention(
+        spark, fixture_dir, hours=24, vehicle_id=ABSENT_VEHICLE, as_of=AS_OF
+    ).collect() == []
 
 
 def test_rate_clamps_odometer_regress(spark, fixture_dir):
@@ -86,6 +100,20 @@ def test_rate_clamps_odometer_regress(spark, fixture_dir):
     assert out[4]["km_driven"] == 100.0
     # user 1: 4 interventions over 100 km → 4 per 100km
     assert out[1]["rate_per_100km"] == 4.0
+    # telemetry only → 0 events, rate 0; interventions only → absent
+    assert out[2]["n_events"] == 0
+    assert out[2]["rate_per_100km"] == 0.0
+    assert 3 not in out
+    # only NULL values → clamped span 0, so no rate
+    assert out[7]["km_driven"] == 0.0
+    assert out[7]["rate_per_100km"] is None
+    diseng = {
+        r["vehicle_id"]: r
+        for r in metrics.disengagement_rate(spark, fixture_dir, hours=24, as_of=AS_OF).collect()
+    }
+    assert diseng[6]["n_events"] == 1
+    assert diseng[1]["n_events"] == 0
+    assert 3 not in diseng
 
 
 def test_alert_threshold_strictness(spark, fixture_dir):
@@ -103,6 +131,17 @@ def test_alert_threshold_strictness(spark, fixture_dir):
     # value == 10 exactly → NOT collision risk (strict >, consumer.py:114)
     risk_vehicles = {a["vehicle_id"] for a in by_type.get("Collision Risk", [])}
     assert 5 not in risk_vehicles
+
+
+def test_derive_alerts_scans_its_input_once(spark, sf_dir):
+    """The three rules are one filter and one projection, so a batch (or a
+    streaming micro-batch) reads its source once, not once per rule."""
+    from data_pipeline_for_autonomous_vehicles_spark.catalog import load_table
+
+    alerts = metrics.derive_alerts(load_table(spark, sf_dir, "events"))
+    leaves = alerts._jdf.queryExecution().optimizedPlan().collectLeaves()
+    assert leaves.size() == 1
+    assert "parquet" in leaves.apply(0).toString()
 
 
 def test_latest_telemetry_deterministic_tiebreak(spark, tmp_path_factory):
@@ -123,10 +162,67 @@ def test_fleet_summary_single_row(spark, fixture_dir):
     row = metrics.fleet_summary(spark, fixture_dir, hours=24, as_of=AS_OF).collect()
     assert len(row) == 1
     r = row[0]
-    # spans: u1=100, u2=50, u4=100, u5=45.001 → 295.0 (cents-exact)
+    # spans: u1=100, u2=50, u4=100, u5=45.001, u6=0, u7=0 → 295.0 (cents-exact)
     assert r["total_km"] == pytest.approx(295.0, abs=0.01)
+    # user 3's interventions count although it has no telemetry
     assert r["total_interventions"] == 6
     assert r["km_per_intervention"] == pytest.approx(295.0 / 6, abs=0.01)
+    # an empty window still gives one row: no km, no interventions
+    empty = metrics.fleet_summary(spark, fixture_dir, hours=24, as_of=EMPTY_AS_OF).collect()
+    assert [tuple(e) for e in empty] == [(None, 0, None)]
+
+
+# the metrics that project metrics._vehicle_rollup
+_ROLLUP_METRICS = (
+    "km_per_intervention",
+    "intervention_rate",
+    "disengagement_rate",
+    "fleet_summary",
+    "autopilot_engagement",
+)
+
+
+@pytest.mark.parametrize("as_of", [AS_OF, EMPTY_AS_OF])
+def test_rollup_metrics_equal_oracle_on_fixture(spark, fixture_dir, as_of):
+    """The rollup projections equal their DuckDB twins (the reference's
+    joins of aggregates) on the edge cases: interventions without
+    telemetry, telemetry without interventions, NULL values, an empty
+    window."""
+    import duckdb
+
+    from tools.check_oracle import _duckdb_typed_rows, _norm_rows
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{fixture_dir}/events.parquet/*.parquet'")
+    for name in _ROLLUP_METRICS:
+        sdf = metrics.QUERIES[name](spark, fixture_dir, hours=24, as_of=as_of)
+        srows = [tuple(r) for r in sdf.collect()]
+        sql = metrics.ORACLES[name].replace(metrics._sql_win(), metrics._sql_win(24, as_of))
+        dcols, drows, _ = _duckdb_typed_rows(con, sql)
+        assert sorted(sdf.columns) == sorted(dcols), name
+        assert _norm_rows(sdf.columns, srows) == _norm_rows(dcols, drows), name
+        if as_of == AS_OF and name != "fleet_summary":
+            assert {r[0] for r in srows} == {1, 2, 4, 5, 6, 7}, name  # not user 3
+
+
+def test_autopilot_engagement_edge_cases(spark, fixture_dir):
+    def run(vehicle_id=None):
+        return {
+            r["vehicle_id"]: r
+            for r in metrics.autopilot_engagement(
+                spark, fixture_dir, hours=24, vehicle_id=vehicle_id, as_of=AS_OF
+            ).collect()
+        }
+
+    out = run()
+    assert 3 not in out  # interventions only
+    # a NULL value counts as a telemetry row that is not engaged
+    assert (out[6]["engaged_rows"], out[6]["total_rows"]) == (0, 2)
+    assert (out[7]["engaged_rows"], out[7]["total_rows"], out[7]["engagement_pct"]) == (0, 1, 0.0)
+    assert (out[1]["engaged_rows"], out[1]["total_rows"]) == (2, 2)
+    assert run(vehicle_id=6) == {6: out[6]}
+    assert run(vehicle_id=ABSENT_VEHICLE) == {}
 
 
 def test_window_predicate_excludes_old_rows(spark, fixture_dir):
@@ -277,8 +373,8 @@ def test_chart_frames_jobs_carry_caller_job_group(spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         dashboard.release(spark)
-    # the window materialization plus at least one job per collected frame
-    assert len(tracker.getJobIdsForGroup("chart-frames-test")) >= 10
+    # at least one job per collected frame (the caches fill inside them)
+    assert len(tracker.getJobIdsForGroup("chart-frames-test")) >= 9
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
@@ -305,8 +401,9 @@ def test_dashboard_loads_events_once_per_refresh(spark, sf_dir, monkeypatch):
 @pytest.mark.parametrize("vehicle_id", [None, 14])
 def test_dashboard_windowed_frames_read_the_cache(spark, sf_dir, vehicle_id):
     """The one-scan design rests on Spark matching each windowed frame's
-    plan to the cached window; a refactor that breaks the match would
-    silently re-scan storage per frame."""
+    plan to the cached window, and each rollup frame's plan to the cached
+    per-vehicle rollup; a refactor that breaks the match would silently
+    re-scan storage (or re-aggregate) per frame."""
     from data_pipeline_for_autonomous_vehicles_spark import dashboard
 
     snap = dashboard.dashboard_snapshot(spark, sf_dir, vehicle_id=vehicle_id)
@@ -316,6 +413,12 @@ def test_dashboard_windowed_frames_read_the_cache(spark, sf_dir, vehicle_id):
                 continue
             plan = df._jdf.queryExecution().optimizedPlan().toString()
             assert "InMemoryRelation" in plan, name
+            if name in _ROLLUP_METRICS:
+                # reads the cached rollup, and projects it without a join
+                assert any(
+                    "InMemoryRelation" in line and "n_tele" in line for line in plan.splitlines()
+                ), name
+                assert "Join" not in plan, name
     finally:
         dashboard.release(spark)
 

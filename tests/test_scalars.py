@@ -54,10 +54,11 @@ def test_clamp_and_span(spark):
     assert _one(spark, clamp(F.col("v"), 20.0, 90.0), v=3.0) == 20.0
     # odometer regress: span clamps to 0 (queries.py:136 semantics)
     df = spark.createDataFrame([(100.0,), (40.0,)], "v double")
-    assert df.agg(clamped_span("v").alias("s")).first()["s"] == 60.0
+    span = clamped_span(F.max("v"), F.min("v")).alias("s")
+    assert df.agg(span).first()["s"] == 60.0
     neg = spark.createDataFrame([(-10.0,), (-50.0,)], "v double")
     # COALESCE(MAX,0)-COALESCE(MIN,0) = -10 - (-50) = 40 → not clamped
-    assert neg.agg(clamped_span("v").alias("s")).first()["s"] == 40.0
+    assert neg.agg(span).first()["s"] == 40.0
 
 
 def test_nullif_zero(spark):

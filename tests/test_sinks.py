@@ -199,3 +199,21 @@ def test_export_metric_results_matches_reference_driver(spark, sf_dir, tmp_path)
         assert os.path.isfile(path)
         with open(path) as f:
             assert "," in f.readline() or f.readline()  # headered
+
+
+def test_no_session_wide_partition_overwrite_mode():
+    """Dynamic partition overwrite is a writer option: setting it on the
+    session would race every writer that runs concurrently (a dashboard
+    refresh runs nine threads)."""
+    import re
+
+    import data_pipeline_for_autonomous_vehicles_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    hits = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        with open(path) as f:
+            text = f.read()
+        if re.search(r"conf\.set\(\s*[\"']spark\.sql\.sources\.partitionOverwriteMode", text):
+            hits.append(os.path.relpath(path, root))
+    assert hits == []
