@@ -18,8 +18,7 @@ with `.toPandas()` on its own thread, so the nine small plans (a few
 single-task stages each) overlap instead of queueing one after another.
 `dashboard_snapshot` returns the same frames lazily, for callers that
 collect themselves (SURVEY.md §3.1: collect only at the visualization
-edge). The window cache is registered with `caching.register_plan_cache`;
-`release` drops it.
+edge). Both caches go through `caching.materialize`; `release` drops them.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from functools import partial
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
-from .caching import register_plan_cache, release_plan_caches
+from . import caching
 from .catalog import load_table
 from .operators import metrics
 
@@ -41,8 +40,8 @@ def _load_events(spark: SparkSession, sf_dir: str, hours: int, as_of: str) -> Da
     and the per-vehicle rollup over it registered as (lazy) caches for the
     windowed metrics to read."""
     events = load_table(spark, sf_dir, "events")
-    win = register_plan_cache(metrics._win(events, hours, as_of).cache())
-    register_plan_cache(metrics._vehicle_rollup(win).cache())
+    win = caching.materialize(metrics._win(events, hours, as_of), "dashboard.window")
+    caching.materialize(metrics._vehicle_rollup(win), "dashboard.rollup")
     return events
 
 
@@ -89,11 +88,12 @@ def dashboard_snapshot(
 
 
 def release(spark: SparkSession) -> int:
-    """Drop the refresh's window and rollup caches, with every other
-    registered plan cache (`caching.release_plan_caches`, process-wide, so
-    `spark` is not needed); caches the caller persisted itself stay.
-    Returns how many were released."""
-    return release_plan_caches()
+    """Drop the refresh's window and rollup caches, with every other cache
+    and checkpoint registered through `caching` (`release_plan_caches`,
+    process-wide, so `spark` is not needed): the caller must be done with
+    every frame built since the last release. Caches the caller persisted
+    itself stay. Returns how many were released."""
+    return caching.release_plan_caches()
 
 
 def _collect(build: Callable[[], DataFrame]):

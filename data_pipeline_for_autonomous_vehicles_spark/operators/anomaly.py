@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up
 
@@ -282,17 +282,16 @@ def value_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell equi-join. Same cells-not-corpus story as the trend/CUSUM family.
     """
     ev = load_table(spark, sf_dir, "events")
-    cells = (
+    cells = caching.materialize(
         ev.select(
             "event_type",
             F.expr("CAST(to_unix_timestamp(ts) div 3600 AS BIGINT)").alias("h"),
             F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long").alias("v_e2"),
         )
         .groupBy("event_type", "h")
-        .agg(F.sum("v_e2").alias("s"))
-        .cache()
+        .agg(F.sum("v_e2").alias("s")),
+        "value_autocorrelation.cells",
     )
-    cells = _register_cache(cells)
     outs = []
     for k in ACF_LAGS:
         a = cells.select("event_type", "h", F.col("s").alias("x"))

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
@@ -537,17 +538,15 @@ def _excise(base: DataFrame, ivs: DataFrame) -> DataFrame:
 
 
 def fused_curation_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build `_removal_frame` once, cache it (scoped via
-    `pkg.caching.register_plan_cache`), and return it for injection into
-    `substring_dup_removal` / `substring_dup_removal_audit` /
-    `curated_training_shards` / `curated_shard_manifest`. A curation job
+    """Build `_removal_frame` once, cache it (`caching.materialize`), and
+    return it for injection into `substring_dup_removal` /
+    `substring_dup_removal_audit` / `curated_training_shards` /
+    `curated_shard_manifest`. A curation job
     that materializes several of those artifacts pays the
     windows→islands→excision pass once instead of once per artifact; the
     standalone registry entries deliberately do NOT cache (a single
     consumer gains nothing from materialization)."""
-    from ..caching import register_plan_cache
-
-    return register_plan_cache(_removal_frame(spark, sf_dir).cache())
+    return caching.materialize(_removal_frame(spark, sf_dir), "fused_curation_frame")
 
 
 _SUBSTRING_REMOVAL_SQL = f"""
@@ -2047,15 +2046,13 @@ def _boiler_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own segments with a per-row higher-order filter — document text
     never shuffles wider than its own row, exactly like `_removal_frame`.
     """
-    from ..caching import register_plan_cache
-
     w = PASSAGE_TOKENS
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
     base = docs.select("doc_id", tokens().alias("toks"))
-    # scoped cache: segs feeds the df aggregate AND the cut-position probe
-    # — without it the tokenize + md5 segmentation pass over the corpus ran
-    # once per branch (guide §1.2)
-    segs = register_plan_cache(_segment_rows(base).cache())
+    # segs feeds the df aggregate AND the cut-position probe — without the
+    # cache the tokenize + md5 segmentation pass over the corpus ran once
+    # per branch (guide §1.2)
+    segs = caching.materialize(_segment_rows(base), "boiler_frame.segs")
     boiler = _boiler_digests(segs)
     cuts = (
         segs.join(boiler, "digest")
@@ -2075,15 +2072,13 @@ def _boiler_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fused_boiler_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Build `_boiler_frame` once, cache it (scoped via
-    `pkg.caching.register_plan_cache`), and return it for injection into
-    `boilerplate_segment_removal` / `boilerplate_removal_audit` — a job
-    materializing both pays the segment-df pass once. The standalone
+    """Build `_boiler_frame` once, cache it (`caching.materialize`), and
+    return it for injection into `boilerplate_segment_removal` /
+    `boilerplate_removal_audit` — a job materializing both pays the
+    segment-df pass once. The standalone
     registry entries deliberately do NOT cache (a single consumer gains
     nothing from materialization); same contract as `fused_curation_frame`."""
-    from ..caching import register_plan_cache
-
-    return register_plan_cache(_boiler_frame(spark, sf_dir).cache())
+    return caching.materialize(_boiler_frame(spark, sf_dir), "fused_boiler_frame")
 
 
 def boilerplate_segment_removal(
@@ -2219,14 +2214,12 @@ def _boiler_delta_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     on-sight boilerplate gate in `ingest._admission_frame`."""
     from .dedup import DELTA_MOD
 
-    from ..caching import register_plan_cache
-
     docs = _nonempty(load_table(spark, sf_dir, "documents"))
     base = docs.select("doc_id", tokens().alias("toks"))
     is_delta = (F.col("doc_id") % F.lit(DELTA_MOD)) == F.lit(DELTA_MOD - 1)
-    # scoped cache: segs feeds the corpus-df aggregate, the delta probe,
-    # and the delta-df aggregate — three segmentation passes without it
-    segs = register_plan_cache(_segment_rows(base).cache())
+    # segs feeds the corpus-df aggregate, the delta probe, and the
+    # delta-df aggregate — three segmentation passes without the cache
+    segs = caching.materialize(_segment_rows(base), "boiler_delta_frame.segs")
     corpus_df = (
         segs.filter(~is_delta)
         .groupBy("digest")

@@ -26,7 +26,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import (
     round_half_up,
@@ -233,10 +233,10 @@ def _content_frames(docs: DataFrame):
     members = base.select("doc_id", "ckey").withColumn(
         "mrank", F.row_number().over(w_m)
     )
-    members = _register_cache(members.cache())
+    members = caching.materialize(members, "content_frames.members")
     gsize = members.groupBy("ckey").agg(F.count(F.lit(1)).alias("g"))
     reps = base.groupBy("ckey").agg(F.min("text").alias("text"))
-    shc = _register_cache(_shingles_df(reps, id_col="ckey").cache())
+    shc = caching.materialize(_shingles_df(reps, id_col="ckey"), "content_frames.shc")
     sizes = shc.groupBy("ckey").agg(F.count(F.lit(1)).alias("full_size"))
     # Broadcast the *hot* shingle list (doc-level df > MAX_BUCKET — bounded
     # by |postings|/MAX_BUCKET, small by construction) and anti-join, rather
@@ -690,7 +690,7 @@ def _lsh_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signatures are one narrow row per doc; cache so the band explode and
     # the two signature re-joins below read one materialization instead of
     # re-running the shingle shuffle up to 7× (bench: 3.1s → ~1s at sf0.1)
-    sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "lsh_scored_pairs.sigs")
     cand = _lsh_candidates(sigs)
     sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(MINHASH_K)])
     sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(MINHASH_K)])
@@ -985,11 +985,11 @@ def minhash_estimate_audit(
     pair, not per shingle bucket.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "minhash_estimate_audit.sigs")
     # the candidate pair set feeds three consumers below (the estimate join,
     # the exact-intersection join, and the endpoint set that prunes the
     # shingle postings) — cache it so the banded self-join runs once
-    cand = _register_cache(_lsh_candidates(sigs).cache())
+    cand = caching.materialize(_lsh_candidates(sigs), "minhash_estimate_audit.cand")
     sa = sigs.select(F.col("doc_id").alias("doc_a"), *[F.col(f"sig_{i}").alias(f"a_{i}") for i in range(MINHASH_K)])
     sb = sigs.select(F.col("doc_id").alias("doc_b"), *[F.col(f"sig_{i}").alias(f"b_{i}") for i in range(MINHASH_K)])
     matches = sum(
@@ -1019,11 +1019,11 @@ def minhash_estimate_audit(
     cand_docs = cand.select(
         F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
     ).distinct()
-    sh = _register_cache(
+    sh = caching.materialize(
         _shingles_df(docs)
         .select("doc_id", F.unhex(F.md5("shingle")).alias("shingle"))
-        .join(cand_docs, "doc_id", "left_semi")
-        .cache()
+        .join(cand_docs, "doc_id", "left_semi"),
+        "minhash_estimate_audit.sh",
     )
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     inter = (
@@ -1224,7 +1224,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     MinHash targets set-Jaccard, SimHash targets weighted cosine — real
     pipelines run both and union the edge lists.
     """
-    fps = _register_cache(simhash_fingerprints(spark, sf_dir).cache())
+    fps = caching.materialize(simhash_fingerprints(spark, sf_dir), "simhash_hamming_pairs.fps")
     bands = F.array(
         *[
             F.struct(
@@ -1314,9 +1314,11 @@ def near_dup_detector_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scored pairs: agreement compares edge SETS, and the scored form
     # re-joined the 16-column signature frame twice per pair to compute an
     # est_jaccard this report never reads (guide §1.2).
-    sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
-    mh = _register_cache(_lsh_candidates(sigs).cache())
-    sh = _register_cache(simhash_hamming_pairs(spark, sf_dir).select("doc_a", "doc_b").cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "near_dup_detector_agreement.sigs")
+    mh = caching.materialize(_lsh_candidates(sigs), "near_dup_detector_agreement.mh")
+    sh = caching.materialize(
+        simhash_hamming_pairs(spark, sf_dir).select("doc_a", "doc_b"), "near_dup_detector_agreement.sh"
+    )
     n_mh = mh.agg(F.count(F.lit(1)).alias("n_minhash"))
     n_sh = sh.agg(F.count(F.lit(1)).alias("n_simhash"))
     n_both = mh.join(sh, ["doc_a", "doc_b"]).agg(F.count(F.lit(1)).alias("n_both"))
@@ -1395,7 +1397,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles and report NULL novelty rather than vanishing.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh = _register_cache(_shingles_df(docs).cache())
+    sh = caching.materialize(_shingles_df(docs), "doc_ngram_novelty.sh")
     df_counts = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     per_doc = (
         sh.join(df_counts, "shingle")
@@ -1514,11 +1516,11 @@ def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     labels = endpoints = bound = None
     rounds = 0
     while True:
-        cur = (
+        cur = caching.checkpoint(
             cur.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
             .filter(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            "connected_components.edges",
         )
         n = cur.count()
         if bound is None:
@@ -1532,12 +1534,12 @@ def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
                 f"the bound of {bound} rounds with {n} edges left"
             )
         tasks = max(1, math.ceil(n / EDGES_PER_TASK))
-        root = (
+        root = caching.checkpoint(
             cur.coalesce(tasks)
             .mapInPandas(_union_find, f"node {id_type}, root {id_type}")
             .groupBy("node")
-            .agg(F.min("root").alias("root"))
-            .localCheckpoint()
+            .agg(F.min("root").alias("root")),
+            "connected_components.root",
         )
         if labels is None:
             endpoints = root.select("node")
@@ -1576,7 +1578,7 @@ def _near_dup_label_frame(
         F.col("doc_id").alias("node")
     )
     if cand is None:
-        sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
+        sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "near_dup_label_frame.sigs")
         cand = _lsh_candidates(sigs)
     pairs = cand.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     return connected_components(pairs, docs)
@@ -1724,8 +1726,8 @@ def corpus_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # + semi-join probe side), and each read was a full shingle → signature
     # → banding pass over the corpus; the caller checkpoints the RESULT, so
     # without the cache the build pays the signature pass twice
-    bands = _register_cache(
-        _banded(_minhash_signatures(spark, sf_dir)).filter(~_is_delta()).cache()
+    bands = caching.materialize(
+        _banded(_minhash_signatures(spark, sf_dir)).filter(~_is_delta()), "corpus_band_index.bands"
     )
     return _cap_buckets(bands, ["band_id", "band_hash"], MAX_BUCKET).select(
         F.col("doc_id").alias("corpus_doc"), "band_id", "band_hash"
@@ -1784,7 +1786,7 @@ def minhash_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one cached signature pass feeds BOTH sides here (the batch shortcut);
     # the streaming path (`streaming.novelty`) uses `corpus_band_index` +
     # `probe_band_index`, which compute the same expressions per side
-    sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "minhash_delta_probe.sigs")
     bands = _banded(sigs)
     corpus = _cap_buckets(
         bands.filter(~_is_delta()), ["band_id", "band_hash"], MAX_BUCKET
@@ -1936,8 +1938,8 @@ def split_leakage_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate frame and inject it into the component pass, so the banded
     # self-join runs ONCE for both the pair aggregate and the rep labels
     # (it used to run twice — once per consumer)
-    sigs = _register_cache(_minhash_signatures(spark, sf_dir).cache())
-    pairs = _register_cache(_lsh_candidates(sigs).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "split_leakage_compare.sigs")
+    pairs = caching.materialize(_lsh_candidates(sigs), "split_leakage_compare.pairs")
     reps = (
         _near_dup_label_frame(spark, sf_dir, cand=pairs)
         .filter(F.col("node") == F.col("label"))

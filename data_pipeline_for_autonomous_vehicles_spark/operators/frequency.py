@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
@@ -107,7 +107,9 @@ def user_activity_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("x"))
-    cells = _register_cache(per_user.groupBy("x").agg(F.count(F.lit(1)).alias("c")).cache())
+    cells = caching.materialize(
+        per_user.groupBy("x").agg(F.count(F.lit(1)).alias("c")), "user_activity_gini.cells"
+    )
     # running count p via a broadcast theta self-join over the VALUE-DOMAIN
     # cells (cells² is domain-bounded) — keeps the registry-wide
     # no-unpartitioned-window invariant absolute instead of special-casing
@@ -194,9 +196,10 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exist only to audit; at deployment scale only the sketch is kept.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(tokens()).alias("token")).filter(
-        F.length("token") >= 1
-    ).cache()
+    toks = caching.materialize(
+        docs.select(F.explode(tokens()).alias("token")).filter(F.length("token") >= 1),
+        "cms_token_counts.toks",
+    )
     grid = F.array(
         *[
             F.struct(F.lit(d).alias("d"), _cms_bucket(F.col("token"), d).alias("bucket"))

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 
 MAX_EDIT_DISTANCE = 4
@@ -146,14 +146,13 @@ def fuzzy_blocking_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.scalars import portable_hash
 
     part = load_table(spark, sf_dir, "part")
-    names = (
+    names = caching.materialize(
         part.select("p_name")
         .distinct()
         .filter(portable_hash(F.col("p_name")) % 100 < RECALL_SAMPLE_PCT)
-        .withColumn("block", F.element_at(F.split(F.col("p_name"), " "), -1))
-        .cache()
+        .withColumn("block", F.element_at(F.split(F.col("p_name"), " "), -1)),
+        "fuzzy_blocking_recall.names",
     )
-    names = _register_cache(names)
     a = names.select(F.col("p_name").alias("name_a"), F.col("block").alias("block_a"))
     b = names.select(F.col("p_name").alias("name_b"), F.col("block").alias("block_b"))
     true_pairs = (

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 
 PR_SCALE = 10**12  # fixed-point rank units
@@ -57,8 +57,8 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 PageRank nodes after PR_ITERS exact fixed-point iterations,
     with dangling-mass redistribution (suppliers are all dangling)."""
     nodes, edges = _graph(spark, sf_dir)
-    nodes = _register_cache(nodes.cache())
-    edges = _register_cache(edges.cache())
+    nodes = caching.materialize(nodes, "pagerank_top_nodes.nodes")
+    edges = caching.materialize(edges, "pagerank_top_nodes.edges")
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))  # 1 row, broadcast below
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
 
@@ -82,7 +82,7 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # previous iteration per branch — doubling work every round. One
         # eager localCheckpoint per iteration keeps each round one scan
         # (17s → 4s at sf0.01; on a cluster this also caps planning time).
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = caching.checkpoint(ranks, "pagerank_top_nodes.ranks")
         dangling = ranks.filter(F.col("outdeg").isNull()).agg(
             F.coalesce(F.sum("rank"), F.lit(0)).cast("long").alias("dangling")
         )
@@ -200,12 +200,11 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
     rows and the fast path's plan work is one extra (cheap, basket-sized)
     checkpoint of the basket frame both branches read.
     """
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        # read by BOTH the fast path and the hot-basket spill path —
-        # materialize once (narrow: one row per order)
-        .localCheckpoint(eager=True)
+    # read by BOTH the fast path and the hot-basket spill path —
+    # materialize once (narrow: one row per order)
+    baskets = caching.checkpoint(
+        li.groupBy("l_orderkey").agg(F.array_sort(F.collect_set("l_partkey")).alias("ps")),
+        "copurchase_edges.baskets",
     )
     small = (
         baskets.filter(F.size("ps") <= BASKET_CAP)
@@ -257,16 +256,12 @@ def _copurchase_edges(li: DataFrame) -> DataFrame:
         )
         .select(F.col("pr.p1").alias("p1"), F.col("pr.p2").alias("p2"))
     )
-    return (
-        small.unionByName(hot)
-        .distinct()
-        # read by the degree agg, the orientation join, and the count —
-        # materialize once EAGERLY (narrow int64 pairs): the lazy form let
-        # each downstream branch race to materialize it and re-derived the
-        # pair expansion along the way (measured 105 s vs 60 s staged at
-        # ~sf1 for the whole census)
-        .localCheckpoint(eager=True)
-    )
+    # read by the degree agg, the orientation join, and the count —
+    # materialize once EAGERLY (narrow int64 pairs): the lazy form let
+    # each downstream branch race to materialize it and re-derived the
+    # pair expansion along the way (measured 105 s vs 60 s staged at
+    # ~sf1 for the whole census)
+    return caching.checkpoint(small.unionByName(hot).distinct(), "copurchase_edges.pairs")
 
 
 def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +294,7 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # its lowest-degree vertex, so out-degrees are O(√m)-bounded
     du = deg.select(F.col("p").alias("p1"), F.col("deg").alias("deg1"))
     dv = deg.select(F.col("p").alias("p2"), F.col("deg").alias("deg2"))
-    directed = (
+    directed = caching.checkpoint(
         edges.join(du, "p1")
         .join(dv, "p2")
         .select(
@@ -311,8 +306,8 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.struct(F.col("p2").alias("u"), F.col("p1").alias("v")))
             .alias("e")
         )
-        .select("e.u", "e.v")
-        .localCheckpoint(eager=True)
+        .select("e.u", "e.v"),
+        "copurchase_triangle_count.directed",
     )
     # edge-iterator with neighborhood intersection (the round-4 rewrite of
     # the explicit wedge join): per directed edge (u, v), the triangles it
@@ -323,10 +318,9 @@ def copurchase_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(√m)-bounded by the orientation, so arrays stay small) and the
     # intersection is a per-row JVM array op on the m-row edge frame.
     # Measured at ~sf1: 139.6 s (wedge join) → 59 s cold / 37 s warm.
-    adj = (
-        directed.groupBy("u")
-        .agg(F.array_sort(F.collect_list("v")).alias("nbrs"))
-        .localCheckpoint(eager=True)  # read twice by the closing joins
+    adj = caching.checkpoint(  # read twice by the closing joins
+        directed.groupBy("u").agg(F.array_sort(F.collect_list("v")).alias("nbrs")),
+        "copurchase_triangle_count.adj",
     )
     tri_per_edge = (
         directed.select("u", "v")

@@ -58,6 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import (
     portable_hash,
@@ -89,7 +90,6 @@ def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rejected docs appear with zeros — the audit trail row). Shared by
     `incremental_admission_manifest` (adds the sort) and
     `incremental_shard_update` (aggregates it)."""
-    from ..caching import register_plan_cache
     from .corpus import (
         FLUENCY_FLOOR,
         _boiler_delta_frame,
@@ -114,7 +114,7 @@ def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gate 1 — novelty: one cached signature pass feeds the corpus index and
     # the delta postings (the batch shortcut; a real ingest reads the
     # persisted band index and computes signatures for the delta only)
-    sigs = register_plan_cache(_minhash_signatures(spark, sf_dir).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "admission_frame.sigs")
     bands = _banded(sigs)
     corpus_idx = _cap_buckets(
         bands.filter(~_is_delta()), ["band_id", "band_hash"], MAX_BUCKET
@@ -191,7 +191,7 @@ def _admission_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (round-9 verdict task 9, guide §1.2; the corpus-side c_keep pass is
     # a single consumer and stays uncached — the full-corpus window
     # rewrite measured slower, see the NOTE above)
-    dwins = register_plan_cache(wins.filter(_is_delta()).cache())
+    dwins = caching.materialize(wins.filter(_is_delta()), "admission_frame.dwins")
     d_keep = dwins.groupBy("digest").agg(F.min("doc_id").alias("_d_min"))
     cut = (
         dwins.join(c_keep, "digest", "left")
@@ -294,7 +294,6 @@ def incremental_shard_update(
     for the shares. Inject ``frame=_admission_frame(...)`` (cached) when a
     job also materializes the manifest — the gate pass then runs once.
     """
-    from ..caching import register_plan_cache
     from .text import N_SHARDS
 
     per = _admission_frame(spark, sf_dir) if frame is None else frame
@@ -318,7 +317,7 @@ def incremental_shard_update(
     # the batch token total IS the rollup's grand-total row — cache the
     # 17-row aggregate so reading it twice (rows + total) runs the whole
     # admission plan once, not twice
-    g = register_plan_cache(g.cache())
+    g = caching.materialize(g, "incremental_shard_update.g")
     tot = g.filter(F.col("shard").isNull()).select(
         F.col("n_tokens_appended").alias("_tot_tok")
     )

@@ -23,6 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import load_table
 
 N_FEATURES = 16  # byte-histogram bins in the stub decoder
@@ -345,9 +346,7 @@ def media_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import MAX_BUCKET, _cap_buckets
 
-    from ..caching import register_plan_cache
-
-    fps = register_plan_cache(media_phash(media_table(spark, sf_dir)).cache())
+    fps = caching.materialize(media_phash(media_table(spark, sf_dir)), "media_near_dups.fps")
     bands = F.array(
         *[
             F.struct(
@@ -472,7 +471,6 @@ def _pair_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     media_id IS the doc linkage) and its caption near-dup component (over
     `minhash_lsh_pairs`). Shared by the pair manifest and the savings
     report."""
-    from ..caching import register_plan_cache
     from .dedup import _lsh_candidates, _minhash_signatures, connected_components
 
     docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
@@ -482,7 +480,7 @@ def _pair_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate SET, not scored pairs: the component pass only needs edges,
     # and the scored form re-joins the 16-column signature frame twice per
     # pair for an est_jaccard the CC loop drops (guide §1.2)
-    sigs = register_plan_cache(_minhash_signatures(spark, sf_dir).cache())
+    sigs = caching.materialize(_minhash_signatures(spark, sf_dir), "pair_groups.sigs")
     txt_edges = _lsh_candidates(sigs).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
@@ -492,10 +490,11 @@ def _pair_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed in a single job, so Spark runs the two edge builds as
     # parallel stages instead of two driver-serialized jobs; each component
     # pass then reads its filtered slice of the checkpoint once.
-    tagged = (
-        img_edges.select(F.lit(0).alias("_m"), "a", "b")
-        .unionByName(txt_edges.select(F.lit(1).alias("_m"), "a", "b"))
-        .localCheckpoint()
+    tagged = caching.checkpoint(
+        img_edges.select(F.lit(0).alias("_m"), "a", "b").unionByName(
+            txt_edges.select(F.lit(1).alias("_m"), "a", "b")
+        ),
+        "pair_groups.tagged",
     )
     img = connected_components(tagged.filter(F.col("_m") == 0), docs).select(
         F.col("node").alias("doc_id"), F.col("label").alias("img_group")
@@ -536,7 +535,7 @@ def media_text_pair_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~sf1 (32.7 s with vs 32.0 s without, min-of-3 — inside this query's
     # 28–35 s band) but the 100 TB-right shape: one narrow 4-column
     # materialization replaces a second run of several corpus-sized joins.
-    j = grp.join(quality, "doc_id").localCheckpoint(eager=True)
+    j = caching.checkpoint(grp.join(quality, "doc_id"), "media_text_pair_dedup.j")
     # NOTE (round 8, measured): a whole-partition window form of the
     # canonical election (one pass over j, no join-back) was tried and is
     # SLOWER (29.2 → 32.8 s at ~sf1): the pair-group subtree j references

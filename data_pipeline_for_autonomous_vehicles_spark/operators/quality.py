@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up, sql_round_half_up
 
@@ -529,16 +529,15 @@ def value_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
-    cells = (
+    cells = caching.materialize(
         ev.select(
             "event_type",
             F.floor(F.col("value") * F.lit(100.0) + F.lit(0.5)).cast("long").alias("v_e2"),
         )
         .groupBy("event_type", "v_e2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .cache()
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "value_mad_outliers.cells",
     )
-    cells = _register_cache(cells)
     per_type = Window.partitionBy("event_type")
 
     def _median_of(cdf_cells: DataFrame, val_col: str) -> DataFrame:

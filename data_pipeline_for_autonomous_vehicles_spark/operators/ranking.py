@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 import math as _math
 
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
@@ -93,7 +94,8 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(toks).cast("long").alias("dl"),
         *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(QUERY_TERMS)],
-    ).cache()  # (doc_id, 4 longs): tokenize once, both passes read this
+    )
+    base = caching.materialize(base, "bm25_topk.base")  # (doc_id, 4 longs): both passes read it
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("dl").alias("total_tokens"),
@@ -307,11 +309,11 @@ def retrieval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("source").alias("qsource"), F.lit(1).alias("_k"))
         .limit(1)
     )
-    rel = (
+    rel = caching.materialize(
         docs.withColumn("_k", F.lit(1))
         .join(F.broadcast(qsrc), "_k", "left")
-        .select("doc_id", _rel_expr())
-        .localCheckpoint(eager=False)
+        .select("doc_id", _rel_expr()),
+        "retrieval_ndcg_report.rel",
     )
     disc = F.element_at(
         F.array(*[F.lit(d) for d in _NDCG_DISCOUNTS]), F.col("rank").cast("int")
@@ -340,7 +342,7 @@ def retrieval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice — once per side of the K²-pair join. The top-k frames are ≤ K
     # rows: checkpoint them eagerly so each composed system runs exactly
     # once per report (round-9 verdict task 3, guide §1.2).
-    hy_top = hybrid_search_rrf(spark, sf_dir).localCheckpoint(eager=True)
+    hy_top = caching.checkpoint(hybrid_search_rrf(spark, sf_dir), "retrieval_ndcg_report.hy_top")
     hy = rank_of_topk(hy_top, "rrf_score", "doc_id").select(
         "doc_id", F.col("topk_pos").cast("long").alias("rank")
     )
@@ -353,20 +355,20 @@ def retrieval_ndcg_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # IVF-PQ ranks ascending by approx squared distance; rank_of_topk wants
     # a descending score, so negate (ties broken by vec_id, as served)
-    pq_top = (
-        ann_ivfpq_topk(spark, sf_dir)
-        .withColumn("neg_dist", -F.col("approx_sqdist"))
-        .localCheckpoint(eager=True)
+    pq_top = caching.checkpoint(
+        ann_ivfpq_topk(spark, sf_dir).withColumn("neg_dist", -F.col("approx_sqdist")),
+        "retrieval_ndcg_report.pq_top",
     )
     pq = rank_of_topk(pq_top, "neg_dist", "vec_id").select(
         F.col("vec_id").alias("doc_id"), F.col("topk_pos").cast("long").alias("rank")
     )
     # same self-join shape: the NDCG_K-row ideal head would otherwise run
-    # its TakeOrdered pass over the (checkpointed) relevance frame twice
+    # its TakeOrdered pass over the (cached) relevance frame twice
     ideal = rank_of_topk(
-        rel.orderBy(F.desc("rel"), F.asc("doc_id"))
-        .limit(NDCG_K)
-        .localCheckpoint(eager=True),
+        caching.checkpoint(
+            rel.orderBy(F.desc("rel"), F.asc("doc_id")).limit(NDCG_K),
+            "retrieval_ndcg_report.ideal",
+        ),
         "rel",
         "doc_id",
     ).select(F.col("topk_pos").cast("long").alias("rank"), "rel")

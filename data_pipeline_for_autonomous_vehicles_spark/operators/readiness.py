@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..functions.scalars import round_half_up, sql_round_half_up
 
 # committed gate tolerances (badness percent, pass when headline <= threshold)
@@ -96,10 +97,8 @@ def corpus_readiness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("h")
     )
     # two gates reduce the same 20-row audit — cache it so its full-outer
-    # doc⋈embedding plan runs once (scoped release via the session host)
-    from ..caching import register_plan_cache
-
-    cov_frame = register_plan_cache(embedding_coverage_audit(spark, sf_dir).cache())
+    # doc⋈embedding plan runs once
+    cov_frame = caching.materialize(embedding_coverage_audit(spark, sf_dir), "corpus_readiness_report.cov")
     coverage = cov_frame.agg(
         F.max(
             F.when(

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import (
     portable_hash,
@@ -136,9 +136,8 @@ def _dsir_logweights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, logw_e6): exact int64 importance score per doc.
 
     The cell frame feeds two branches (bucket marginals and the per-doc
-    dot product); caching it makes the explode→hash-agg pass run once —
-    scoped release via release_plan_caches (caching.py policy)."""
-    cells = _register_cache(_dsir_doc_cells(spark, sf_dir).cache())
+    dot product); caching it makes the explode→hash-agg pass run once."""
+    cells = caching.materialize(_dsir_doc_cells(spark, sf_dir), "dsir_logweights.cells")
     buckets = cells.groupBy("bucket").agg(
         F.sum("c").alias("raw_c"),
         F.sum(
@@ -301,7 +300,7 @@ def dsir_heldout_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-sample signal WAS self-influence, which a production selector
     must not credit. Pinned in tests.
     """
-    cells = _register_cache(_dsir_doc_cells(spark, sf_dir).cache())
+    cells = caching.materialize(_dsir_doc_cells(spark, sf_dir), "dsir_heldout_scores.cells")
     fold = (
         portable_hash(
             F.concat(F.lit(_DSIR_FOLD_SALT), F.col("doc_id").cast("string"))

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table, spread_small_scan
 from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
@@ -480,9 +480,9 @@ def ann_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # the tagged candidate set feeds BOTH the per-budget top-k and the
-    # per-budget candidate counts — cache it (scoped) so the corpus
-    # assignment + probe join runs once, not once per branch
-    cand = _register_cache(cand.cache())
+    # per-budget candidate counts — cache it so the corpus assignment +
+    # probe join runs once, not once per branch
+    cand = caching.materialize(cand, "ann_nprobe_recall_curve.cand")
     budgets = F.explode(F.array(*[F.lit(p) for p in NPROBE_SWEEP])).alias("nprobe")
     c2 = cand.select("*", budgets).filter(F.col("rn") <= F.col("nprobe"))
     w_rank = Window.partitionBy("nprobe", "query_id").orderBy(
@@ -862,8 +862,8 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expensive map work (tokenization / cosine) runs a single time. The
     # materialized frames are narrow — (id, int64) / (id, double) — so this
     # is bytes-per-row cheap at any N, unlike re-tokenizing text 3×.
-    lex = lex.localCheckpoint(eager=False)
-    vec = vec.localCheckpoint(eager=False)
+    lex = caching.materialize(lex, "hybrid_search_rrf.lex")
+    vec = caching.materialize(vec, "hybrid_search_rrf.vec")
     m_cut = 2 * (RRF_K + RRF_TOP)  # provable bound — see docstring
     cand = (
         lex.orderBy(F.desc("lex_score"), F.asc("doc_id"))
@@ -1059,7 +1059,7 @@ def _km_final_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round's codebook otherwise re-executes every PREVIOUS round's
         # corpus-sized assignment pass inside the broadcast job (guide
         # §1.2; same fix as `_pq_codebooks`)
-        cents = _km_update(assigned).localCheckpoint(eager=True)
+        cents = caching.checkpoint(_km_update(assigned), "km_final_assignment.cents")
     return _km_assign(vecs, cents)
 
 
@@ -1210,10 +1210,10 @@ def _pq_codebooks(vecs: DataFrame) -> DataFrame:
     all M codebooks (subspace id is just another grouping key), so training
     is M parallel little k-means in a single plan."""
     # every Lloyd round re-reads the full subvector frame (assignment +
-    # cell means) — cache it once (scoped) so training rounds after the
+    # cell means) — cache it once so training rounds after the
     # first read one materialization instead of re-running the scan +
     # scale + explode per round (round-9 verdict task 4, guide §1.2)
-    subs = _register_cache(_pq_subvectors(vecs).cache())
+    subs = caching.materialize(_pq_subvectors(vecs), "pq_codebooks.subs")
     cents = subs.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").cast("int").alias("cid"), F.col("sv").alias("c")
     )
@@ -1240,7 +1240,7 @@ def _pq_codebooks(vecs: DataFrame) -> DataFrame:
         # assignment passes inside the broadcast job (guide §1.2: each
         # round's plan referenced the previous round's, so corpus passes
         # multiplied instead of adding). Iteration state as a (tiny) table.
-        cents = cents.localCheckpoint(eager=True)
+        cents = caching.checkpoint(cents, "pq_codebooks.cents")
     return cents
 
 
@@ -1752,7 +1752,7 @@ def _semdedup_frames(
     # the capped examined set is ≤ k·SEMDEDUP_CAP rows and feeds BOTH sides
     # of the pairwise join plus the examined-count aggregate — cache it so
     # the corpus-sized rank window runs once, not once per branch
-    ex = _register_cache(mem.filter(F.col("mrank") <= SEMDEDUP_CAP).cache())
+    ex = caching.materialize(mem.filter(F.col("mrank") <= SEMDEDUP_CAP), "semdedup_frames.ex")
     a = ex.select("cid", F.col("vec_id").alias("va"), F.col("sx").alias("xa"), F.col("n2").alias("na"))
     b = ex.select("cid", F.col("vec_id").alias("vb"), F.col("sx").alias("xb"), F.col("n2").alias("nb"))
     pairs = (
@@ -2017,7 +2017,7 @@ def incremental_semdedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # eager k-row checkpoint per Lloyd round (same fix as
         # `_km_final_assignment`): broadcasting a later round's codebook
         # otherwise replays every previous round's corpus pass
-        cents = _km_update(_km_assign(corpus, cents)).localCheckpoint(eager=True)
+        cents = caching.checkpoint(_km_update(_km_assign(corpus, cents)), "incremental_semdedup_probe.cents")
     dot = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, v: acc + v
     )
@@ -2249,7 +2249,7 @@ def source_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.join(docs, "vec_id").select(
         "source", _scaled_vec(F.col("embedding")).alias("sx")
     )
-    cells = (
+    cells = caching.materialize(
         vecs.select("source", F.posexplode("sx").alias("pos", "v"))
         .groupBy("source", "pos")
         .agg(
@@ -2258,10 +2258,9 @@ def source_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("m")
-        )
-        .cache()
+        ),
+        "source_centroid_similarity.cells",
     )
-    cells = _register_cache(cells)
     norms = cells.groupBy("source").agg(F.sum(F.col("m") * F.col("m")).alias("n2"))
     a = cells.select(F.col("source").alias("source_a"), "pos", F.col("m").alias("ma"))
     b = cells.select(F.col("source").alias("source_b"), "pos", F.col("m").alias("mb"))
@@ -2504,7 +2503,7 @@ def uncertainty_sampling_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(2):
         # eager k-row checkpoint per Lloyd round (same fix as
         # `_km_final_assignment`)
-        cents = _km_update(_km_assign(vecs, cents)).localCheckpoint(eager=True)
+        cents = caching.checkpoint(_km_update(_km_assign(vecs, cents)), "uncertainty_sampling_topk.cents")
     cb = cents.agg(F.array_sort(F.collect_list(F.struct("cid", "c"))).alias("_cb"))
     ranked = F.array_sort(
         F.transform(
@@ -2610,11 +2609,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", sq_e4, "emb")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sq_e4"), F.asc("vec_id"))
-    cand = _register_cache(
+    cand = caching.materialize(
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MMR_CANDIDATES)
-        .drop("rn")
-        .cache()
+        .drop("rn"),
+        "mmr_diversified_topk.cand",
     )
     a = cand.select("query_id", F.col("vec_id").alias("va"), F.col("emb").alias("ea"))
     b = cand.select("query_id", F.col("vec_id").alias("vb"), F.col("emb").alias("eb"))
@@ -2623,10 +2622,9 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("s_e4")
     )
-    pair = _register_cache(
-        a.join(b, "query_id").filter(F.col("va") != F.col("vb"))
-        .select("query_id", "va", "vb", s_e4)
-        .cache()
+    pair = caching.materialize(
+        a.join(b, "query_id").filter(F.col("va") != F.col("vb")).select("query_id", "va", "vb", s_e4),
+        "mmr_diversified_topk.pair",
     )
     # step 1: pure relevance argmax
     p1 = cand.groupBy("query_id").agg(
@@ -2680,7 +2678,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # truncate lineage each round (the graph.py per-round pattern):
         # sel is referenced twice per step, so without this the plan tree
         # doubles per iteration — ≤ |queries|·K rows, trivially small
-        sel = sel.unionByName(pick).localCheckpoint()
+        sel = caching.checkpoint(sel.unionByName(pick), "mmr_diversified_topk.sel")
     return sel.select(
         "query_id",
         "rank",
@@ -2781,14 +2779,15 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = cells.groupBy("i", "j").agg(
         F.sum(F.col("xi") * F.col("xj")).alias("g_e12")
     )
-    g = _register_cache(
+    g = caching.materialize(
         gram.select(
             "i",
             "j",
             F.floor(F.col("g_e12").cast("double") / F.lit(1e9) + F.lit(0.5))
             .cast("long")
             .alias("g_e3"),
-        ).cache()
+        ),
+        "embedding_pca_top_component.g",
     )
     v = spark.range(DIM).select(
         F.col("id").cast("int").alias("j"), F.lit(1000).cast("long").alias("v_e3")
@@ -2798,10 +2797,10 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("g_e3") * F.col("v_e3")).alias("w")
         )
         m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = (
+        v = caching.checkpoint(
             w.crossJoin(F.broadcast(m))
-            .select(F.col("i").alias("j"), F.expr("(w * 1000) DIV m").alias("v_e3"))
-            .localCheckpoint()
+            .select(F.col("i").alias("j"), F.expr("(w * 1000) DIV m").alias("v_e3")),
+            "embedding_pca_top_component.v",
         )
     wf = g.join(v, "j").groupBy("i").agg(
         F.sum(F.col("g_e3") * F.col("v_e3")).alias("w")

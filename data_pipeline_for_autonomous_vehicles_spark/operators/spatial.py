@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 
 RADIUS_M = 3_000.0
@@ -87,7 +87,7 @@ def nearby_vehicle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both join sides derive from the same latest-event window over the full
     # events table — cache the tiny (one row per vehicle) result so the scan
     # + window run once
-    pos = _register_cache(vehicle_positions(spark, sf_dir).cache())
+    pos = caching.materialize(vehicle_positions(spark, sf_dir), "nearby_vehicle_pairs.pos")
     cell_x = F.floor(F.col("lat") / F.lit(CELL_LAT_DEG)).cast("long")
     cell_y = F.floor(F.col("lon") / F.lit(CELL_LON_DEG)).cast("long")
 
@@ -195,7 +195,7 @@ def spatial_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .dedup import connected_components
 
-    pos = _register_cache(vehicle_positions(spark, sf_dir).cache())
+    pos = caching.materialize(vehicle_positions(spark, sf_dir), "spatial_clusters.pos")
     cell_x = F.floor(F.col("lat") / F.lit(CELL_LAT_DEG)).cast("long")
     cell_y = F.floor(F.col("lon") / F.lit(CELL_LON_DEG)).cast("long")
     right = pos.select(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..catalog import load_table, spread_small_scan
 from ..functions.scalars import round_half_up, sql_round_half_up, sql_tokens, tokens
 
@@ -1279,13 +1280,13 @@ def _bpe_induct(spark: SparkSession, sf_dir: str):
     table feeds `bpe_merge_rounds`; the merged vocab is the induced
     tokenizer `bpe_compression_by_lang` applies back to the corpus."""
     docs = _docs_table(spark, sf_dir)
-    vocab = (
+    vocab = caching.checkpoint(
         docs.select(F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wn"))
-        .select("word", F.split("word", "").alias("syms"), "wn")
-        .localCheckpoint(eager=True)
+        .select("word", F.split("word", "").alias("syms"), "wn"),
+        "bpe_induct.vocab",
     )
     merge_expr = F.expr(
         """
@@ -1312,9 +1313,7 @@ def _bpe_induct(spark: SparkSession, sf_dir: str):
             .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
             .agg(F.sum("wn").cast("long").alias("n"))
         )
-        best = (
-            pairs.orderBy(F.desc("n"), "a", "b").limit(1).localCheckpoint(eager=True)
-        )
+        best = caching.checkpoint(pairs.orderBy(F.desc("n"), "a", "b").limit(1), "bpe_induct.best")
         if best.isEmpty():
             # Pair table dry (corpus fully merged / all single-symbol words):
             # the reference trainer breaks and keeps the last vocab. The vocab
@@ -1331,14 +1330,11 @@ def _bpe_induct(spark: SparkSession, sf_dir: str):
                 "n",
             )
         )
-        vocab = (
+        vocab = caching.checkpoint(
             vocab.crossJoin(
-                F.broadcast(
-                    best.select(F.col("a").alias("pa"), F.col("b").alias("pb"))
-                )
-            )
-            .select("word", merge_expr.alias("syms"), "wn")
-            .localCheckpoint(eager=True)
+                F.broadcast(best.select(F.col("a").alias("pa"), F.col("b").alias("pb")))
+            ).select("word", merge_expr.alias("syms"), "wn"),
+            "bpe_induct.vocab",
         )
     return vocab, rounds
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import (
     exact_avg,
@@ -858,7 +858,7 @@ def monthly_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation, so no distinct aggregate touches the fact table.
     """
     ev = load_table(spark, sf_dir, "events")
-    ud = _register_cache(ev.select("user_id", F.to_date("ts").alias("day")).distinct().cache())
+    ud = caching.materialize(ev.select("user_id", F.to_date("ts").alias("day")).distinct(), "monthly_stickiness.ud")
     with_m = ud.withColumn("month", F.trunc("day", "MM"))
     dau = with_m.groupBy("month", "day").agg(F.count(F.lit(1)).alias("dau"))
     per_month_days = dau.groupBy("month").agg(
@@ -1011,15 +1011,13 @@ def weekly_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.
     """
     ev = load_table(spark, sf_dir, "events")
-    uw = (
+    uw = caching.materialize(
         ev.select(
             "user_id",
             F.expr("CAST(to_unix_timestamp(CAST(ts AS DATE)) div 86400 AS BIGINT) div 7").alias("week"),
-        )
-        .distinct()
-        .cache()
+        ).distinct(),
+        "weekly_growth_accounting.uw",
     )
-    uw = _register_cache(uw)
     first = uw.groupBy("user_id").agg(F.min("week").alias("first_week"))
     prev = uw.select("user_id", (F.col("week") + 1).alias("week"), F.lit(1).alias("active_prev"))
     classified = (

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache as _register_cache
+from .. import caching
 from ..catalog import load_table
 from ..functions.scalars import round_half_up
 
@@ -263,9 +263,8 @@ def _tie_aware_running(
     # localCheckpoint — building the query stays job-free (no eager
     # materialization), and correctness never depends on it (every derived
     # quantity is a pure function of the key multiset), it only avoids
-    # recompute. Lifecycle: registered for release_plan_caches() — see
-    # plans.audit; a long-lived session should call it between queries.
-    dist = _register_cache(dist.cache())
+    # recompute.
+    dist = caching.materialize(dist, "tie_aware_running.dist")
     # Data-derived range-partition id. `d` feeds two plan branches
     # (per-partition subtotals + the join-back); a repartitionByRange +
     # spark_partition_id() here would compile to two independent

@@ -23,6 +23,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import caching
 from ..functions.scalars import clamp
 from ..schemas import DIRECTIONS, DRIVING_EVENT_TYPES, OBJECT_CLASSES
 
@@ -189,7 +190,7 @@ def generate_fleet(
 ) -> dict[str, DataFrame]:
     """The full reference stream set: telemetry + perception + driving events
     (the three Kafka topics, producer.py:134-202) as batch DataFrames."""
-    tel = generate_telemetry(spark, n_vehicles, n_ticks, seed, start).cache()
+    tel = caching.materialize(generate_telemetry(spark, n_vehicles, n_ticks, seed, start), "generate_fleet.tel")
     return {
         "vehicle_telemetry": tel.drop("r_event"),
         "perception_events": generate_perception(tel, seed),

@@ -10,7 +10,7 @@ which admits everything unconditionally.
 
 Design (stream-static probe via foreachBatch):
   - the corpus band INDEX is built once, batch-side, and eagerly
-    materialized (`localCheckpoint`) before the stream starts — at 100 TB
+    materialized (`caching.checkpoint`) before the stream starts — at 100 TB
     this is the persisted band table bucketed by (band_id, band_hash);
   - each micro-batch runs the exact batch probe machinery
     (`dedup.probe_band_index`: signatures → band postings → index
@@ -35,6 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import caching
 from ..operators.dedup import _is_delta, corpus_band_index, probe_band_index
 
 DOCS_SCHEMA = StructType(
@@ -107,7 +108,7 @@ def streaming_novelty_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    index = corpus_band_index(spark, sf_dir).localCheckpoint(eager=True)
+    index = caching.checkpoint(corpus_band_index(spark, sf_dir), "streaming_novelty_probe.index")
     stream = stream_documents(spark, sf_dir).where(_is_delta())
     # Verdicts append to a scratch parquet dir inside each micro-batch —
     # executor-side writes, nothing funnels through the driver (r4 verdict
@@ -220,8 +221,8 @@ def streaming_curation_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    index = corpus_band_index(spark, sf_dir).localCheckpoint(eager=True)
-    model = corpus_bigram_model(spark, sf_dir).localCheckpoint(eager=True)
+    index = caching.checkpoint(corpus_band_index(spark, sf_dir), "streaming_curation_verdicts.index")
+    model = caching.checkpoint(corpus_bigram_model(spark, sf_dir), "streaming_curation_verdicts.model")
     stream = stream_documents(spark, sf_dir).where(_is_delta())
     out_dir = tempfile.mkdtemp(prefix="curation_verdicts_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
@@ -326,7 +327,7 @@ def streaming_boilerplate_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    index = corpus_boiler_index(spark, sf_dir).localCheckpoint(eager=True)
+    index = caching.checkpoint(corpus_boiler_index(spark, sf_dir), "streaming_boilerplate_gate.index")
     stream = stream_documents(spark, sf_dir).where(_is_delta())
     out_dir = tempfile.mkdtemp(prefix="boiler_gate_")
     atexit.register(shutil.rmtree, out_dir, ignore_errors=True)

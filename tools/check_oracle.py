@@ -105,9 +105,9 @@ def main() -> int:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
-            # release per-query .cache()s (LSH signatures, shingle frames, …)
-            # so a full-registry sweep doesn't accumulate executor memory;
-            # the scoped release also keeps caching._PLAN_CACHES bounded
+            # the rows are collected, so free the query's caches and local
+            # checkpoints: a full-registry sweep must not accumulate executor
+            # storage, nor let one query's cache substitute into the next plan
             release_plan_caches()
             spark.catalog.clearCache()
         except Exception as e:

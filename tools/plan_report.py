@@ -3,7 +3,9 @@
 Columns: exchange count, join strategies used, whether the plan contains a
 CartesianProduct or any unpartitioned window (both must be 'no' — pinned by
 tests/test_plans.py::test_registry_wide_no_cartesian_no_unpartitioned_windows),
-and whether the final sort compiles to TakeOrderedAndProject.
+and whether the final sort compiles to TakeOrderedAndProject. Each row is
+planned after the previous query's caches are released, so it equals the
+query's plan in a fresh session.
 
 This is a review artifact, not a gate: the gate is the pytest assertion.
 Regenerate with:
@@ -22,7 +24,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
     import __spark_entry__ as entrymod
-    from data_pipeline_for_autonomous_vehicles_spark import plans
+    from data_pipeline_for_autonomous_vehicles_spark import caching, plans
     from data_pipeline_for_autonomous_vehicles_spark.session import get_spark
 
     spark = get_spark("plan_report")
@@ -41,6 +43,9 @@ def main() -> int:
                 "yes" if "TakeOrderedAndProject" in txt else "no",
             )
         )
+        # a cache registered by this query would substitute into the next
+        # query's plan, so each row must start from an empty cache manager
+        caching.release_plan_caches(blocking=True)
 
     lines = [
         "# PLANS — physical-plan audit of every registered query",
