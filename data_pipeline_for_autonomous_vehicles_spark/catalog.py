@@ -113,8 +113,3 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register each table as a temp view so SQL-form operators can run."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

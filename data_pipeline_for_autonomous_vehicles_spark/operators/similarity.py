@@ -3,7 +3,9 @@
 Brute-force cosine top-k as the correctness baseline, plus an LSH-bucketed
 variant as the scale path. All vector math is JVM-side higher-order
 functions (zip_with + aggregate = sequential fold, deterministic order) on
-double-cast arrays; no Python UDFs.
+double-cast arrays. The only Python is two grouped pandas calls
+(`applyInPandas`) that run small-state loops in exact integers: the PCA
+power iteration over the d×d Gram and the MMR greedy picks per query.
 
 Scale notes (100 TB): brute force is O(|Q|·|N|) — fine when the query set is
 small and broadcast (as here: queries broadcast, corpus streamed, no shuffle
@@ -1322,17 +1324,6 @@ def _pq_sql_int_dist(a: str, b: str) -> str:
     )
 
 
-def _pq_sql_assign(subs: str, cents: str) -> str:
-    d = _pq_sql_int_dist("s.sv", "c.c")
-    return f"""
-  SELECT m, vec_id, sv, cid FROM (
-    SELECT s.m, s.vec_id, s.sv, c.cid, {d} AS sqdist,
-           ROW_NUMBER() OVER (PARTITION BY s.m, s.vec_id
-                              ORDER BY {d}, c.cid) AS rn
-    FROM {subs} s JOIN {cents} c ON s.m = c.m) t
-  WHERE rn = 1"""
-
-
 _PQ_SQL_UPDATE = f"""
   SELECT m, cid, list(cv ORDER BY pos) AS c FROM (
     SELECT m, cid, i AS pos,
@@ -2585,13 +2576,42 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: similarities are e4 fixed-point int64, and at λ = 0.5 the
     MMR objective is order-equivalent to the integer sq_e4 − max_sel_e4,
     so every greedy pick is exact integer argmax (ties → lower vec_id).
+    A query with fewer than MMR_K candidates gets one row per candidate.
 
     Scale: candidate generation is the ANN shape (broadcast queries, one
-    corpus scan, per-query top-C); everything after operates on
-    |queries|·C rows — the candidate and pairwise frames are cached
-    (scoped, see caching.py) and each of the K−1 greedy steps is a join +
-    argmax over those tiny frames, independent of corpus size.
+    corpus scan, per-query top-C), and Spark scores the C² candidate pairs
+    (double-fold cosines, as the oracle folds them). The greedy picks then
+    run in one grouped pandas task per query (`applyInPandas`) over its C
+    relevances and C·(C−1) integer pair scores — independent of corpus
+    size, with no job or checkpoint per pick.
     """
+    import numpy as np
+    import pandas as pd
+
+    k_max = MMR_K  # a plain value: the worker cannot import this package
+
+    def _greedy(pdf):
+        ids = np.unique(pdf["vec_id"].to_numpy())  # ascending: ties → lower vec_id
+        a = np.searchsorted(ids, pdf["vec_id"].to_numpy())
+        b = np.searchsorted(ids, pdf["vb"].to_numpy())
+        sq = np.zeros(len(ids), dtype=np.int64)
+        sq[a] = pdf["sq_e4"].to_numpy()
+        off = a != b  # the diagonal carries no pair score
+        s = np.zeros((len(ids), len(ids)), dtype=np.int64)
+        s[a[off], b[off]] = pdf["s_e4"].to_numpy()[off]
+        free = np.ones(len(ids), dtype=bool)
+        msel = np.zeros(len(ids), dtype=np.int64)
+        picks = []
+        for rank in range(1, min(k_max, len(ids)) + 1):
+            left = np.flatnonzero(free)
+            p = left[np.argmin(msel[left] - sq[left])]
+            picks.append((rank, ids[p], sq[p], msel[p]))
+            free[p] = False
+            msel = s[:, p] if rank == 1 else np.maximum(msel, s[:, p])
+        out = pd.DataFrame(picks, columns=["rank", "vec_id", "sq_e4", "msel_e4"])
+        out.insert(0, "query_id", pdf["query_id"].iloc[0])
+        return out
+
     emb = _emb_table(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -2609,76 +2629,28 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "vec_id", sq_e4, "emb")
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("sq_e4"), F.asc("vec_id"))
-    cand = caching.materialize(
+    cand = (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= MMR_CANDIDATES)
-        .drop("rn"),
-        "mmr_diversified_topk.cand",
+        .drop("rn")
     )
-    a = cand.select("query_id", F.col("vec_id").alias("va"), F.col("emb").alias("ea"))
+    a = cand.select("query_id", "vec_id", "sq_e4", F.col("emb").alias("ea"))
     b = cand.select("query_id", F.col("vec_id").alias("vb"), F.col("emb").alias("eb"))
-    s_e4 = (
-        F.floor(_cosine(F.col("ea"), F.col("eb")) * F.lit(10000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("s_e4")
-    )
-    pair = caching.materialize(
-        a.join(b, "query_id").filter(F.col("va") != F.col("vb")).select("query_id", "va", "vb", s_e4),
-        "mmr_diversified_topk.pair",
-    )
-    # step 1: pure relevance argmax
-    p1 = cand.groupBy("query_id").agg(
-        F.min(F.struct((-F.col("sq_e4")).alias("ns"), F.col("vec_id"))).alias("p")
-    )
-    sel = p1.select(
-        "query_id",
-        F.col("p.vec_id").alias("vec_id"),
-        (-F.col("p.ns")).alias("sq_e4"),
-        F.lit(0).cast("long").alias("msel_e4"),
-        F.lit(1).alias("rank"),
-    )
-    for k in range(2, MMR_K + 1):
-        chosen = sel.select("query_id", "vec_id")
-        msel = (
-            pair.join(
-                chosen.select("query_id", F.col("vec_id").alias("vb")),
-                ["query_id", "vb"],
-            )
-            .groupBy("query_id", "va")
-            .agg(F.max("s_e4").alias("msel_e4"))
+    # every candidate pairs with itself too, so each reaches its query's
+    # group even when it is the only one; the diagonal gets no score
+    s_e4 = F.when(
+        F.col("vec_id") != F.col("vb"),
+        F.floor(_cosine(F.col("ea"), F.col("eb")) * F.lit(10000.0) + F.lit(0.5)).cast("long"),
+    ).alias("s_e4")
+    sel = (
+        a.join(b, "query_id")
+        .select("query_id", "vec_id", "sq_e4", "vb", s_e4)
+        .groupBy("query_id")
+        .applyInPandas(
+            _greedy,
+            "query_id long, rank int not null, vec_id long, sq_e4 long, msel_e4 long",
         )
-        msel = msel.select(
-            F.col("query_id").alias("_mq"), "va", "msel_e4"
-        )
-        pick = (
-            cand.join(chosen, ["query_id", "vec_id"], "left_anti")
-            .join(
-                msel,
-                (F.col("query_id") == F.col("_mq")) & (F.col("vec_id") == F.col("va")),
-            )
-            .groupBy("query_id")
-            .agg(
-                F.min(
-                    F.struct(
-                        (F.col("msel_e4") - F.col("sq_e4")).alias("nscore"),
-                        F.col("vec_id"),
-                        F.col("sq_e4"),
-                        F.col("msel_e4"),
-                    )
-                ).alias("p")
-            )
-            .select(
-                "query_id",
-                F.col("p.vec_id").alias("vec_id"),
-                F.col("p.sq_e4").alias("sq_e4"),
-                F.col("p.msel_e4").alias("msel_e4"),
-                F.lit(k).alias("rank"),
-            )
-        )
-        # truncate lineage each round (the graph.py per-round pattern):
-        # sel is referenced twice per step, so without this the plan tree
-        # doubles per iteration — ≤ |queries|·K rows, trivially small
-        sel = caching.checkpoint(sel.unionByName(pick), "mmr_diversified_topk.sel")
+    )
     return sel.select(
         "query_id",
         "rank",
@@ -2765,13 +2737,61 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first linear algebra: the corpus collapses to the d×d Gram in
     ONE pass (double posexplode → map-side-combined (i, j) cells — the
-    only stage that touches data); each power step is a join+agg over
-    d² + d rows, lineage-truncated per round. Everything is exact int64:
-    Gram cells are e6-vector products, rescaled to e3 by a mirrored
-    double-floor; normalization divides by max|w| (exact integer DIV —
-    valid for the PSD Gram, no sign oscillation), so every iterate is
-    bit-identical across engines and cluster sizes.
+    only stage that touches data). The d² Gram cells then go to ONE
+    grouped pandas task (`applyInPandas` over a keyless group) that runs
+    the PCA_ITERS power steps, the final product and the Rayleigh and
+    trace sums; Spark rounds and projects its d rows. Everything is exact
+    int64: Gram cells are e6-vector products, rescaled to e3 by a mirrored
+    double-floor; normalization divides by max|w| (integer division
+    truncating toward zero, as Spark's DIV — valid for the PSD Gram, no
+    sign oscillation), so every iterate is bit-identical across engines
+    and cluster sizes. The task computes on Python ints and raises where
+    ANSI SQL would: on an all-zero Gram (max|w| = 0) and on any value
+    outside int64.
+
+    Scale: the Gram pass is one scan of the corpus with a d²-row shuffle;
+    the power steps touch d² cells whatever the corpus size, so they run
+    in one task, with no job or checkpoint per step.
     """
+    import pandas as pd
+
+    iters = PCA_ITERS  # a plain value: the worker cannot import this package
+
+    def _power_iteration(pdf):
+        lo, hi = -(1 << 63), (1 << 63) - 1
+        dim = int(pdf["i"].max()) + 1
+
+        def long(x, what):
+            if not lo <= x <= hi:
+                raise OverflowError(f"[ARITHMETIC_OVERFLOW] {what} = {x} overflows int64")
+            return x
+
+        g = [[0] * dim for _ in range(dim)]
+        for i, j, c in zip(pdf["i"].tolist(), pdf["j"].tolist(), pdf["g_e3"].tolist()):
+            g[i][j] = c
+
+        def times(v):
+            return [
+                long(sum(long(gij * vj, "g_e3 * v_e3") for gij, vj in zip(row, v)), "w")
+                for row in g
+            ]
+
+        v = [1000] * dim
+        for _ in range(iters):
+            w = times(v)
+            m = max(abs(x) for x in w)
+            if m == 0:
+                raise ZeroDivisionError("[DIVIDE_BY_ZERO] power step on an all-zero Gram")
+            # (w * 1000) DIV m: truncate toward zero, not floor
+            v = [(abs(long(x * 1000, "w * 1000")) // m) * (1 if x >= 0 else -1) for x in w]
+        wf = times(v)
+        num = long(sum(long(a * b, "v_e3 * w") for a, b in zip(v, wf)), "num")
+        den = long(sum(a * a for a in v), "den")
+        tr = long(sum(g[i][i] for i in range(dim)), "tr_e3")
+        return pd.DataFrame(
+            {"j": range(dim), "v_e3": v, "num": num, "den": den, "tr_e3": tr}
+        )
+
     emb = _emb_table(spark, sf_dir)
     vecs = emb.select(_scaled_vec(F.col("embedding")).alias("sx"))
     e1 = vecs.select(F.posexplode("sx").alias("i", "xi"), F.col("sx"))
@@ -2779,53 +2799,26 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram = cells.groupBy("i", "j").agg(
         F.sum(F.col("xi") * F.col("xj")).alias("g_e12")
     )
-    g = caching.materialize(
-        gram.select(
-            "i",
-            "j",
-            F.floor(F.col("g_e12").cast("double") / F.lit(1e9) + F.lit(0.5))
-            .cast("long")
-            .alias("g_e3"),
-        ),
-        "embedding_pca_top_component.g",
+    g = gram.select(
+        "i",
+        "j",
+        F.floor(F.col("g_e12").cast("double") / F.lit(1e9) + F.lit(0.5))
+        .cast("long")
+        .alias("g_e3"),
     )
-    v = spark.range(DIM).select(
-        F.col("id").cast("int").alias("j"), F.lit(1000).cast("long").alias("v_e3")
-    )
-    for _ in range(PCA_ITERS):
-        w = g.join(v, "j").groupBy("i").agg(
-            F.sum(F.col("g_e3") * F.col("v_e3")).alias("w")
-        )
-        m = w.agg(F.max(F.abs(F.col("w"))).alias("m"))
-        v = caching.checkpoint(
-            w.crossJoin(F.broadcast(m))
-            .select(F.col("i").alias("j"), F.expr("(w * 1000) DIV m").alias("v_e3")),
-            "embedding_pca_top_component.v",
-        )
-    wf = g.join(v, "j").groupBy("i").agg(
-        F.sum(F.col("g_e3") * F.col("v_e3")).alias("w")
-    )
-    ray = wf.join(v.withColumnRenamed("j", "i"), "i").agg(
-        F.sum(F.col("v_e3") * F.col("w")).alias("num"),
-        F.sum(F.col("v_e3") * F.col("v_e3")).alias("den"),
-    )
-    trace = g.filter(F.col("i") == F.col("j")).agg(
-        F.sum("g_e3").alias("tr_e3")
+    v = g.groupBy().applyInPandas(
+        _power_iteration,
+        "j long not null, v_e3 long, num long, den long, tr_e3 long",
     )
     eig = F.col("num").cast("double") / F.col("den").cast("double") / F.lit(1000.0)
     mean_eig = F.col("tr_e3").cast("double") / F.lit(1000.0 * DIM)
-    return (
-        v.crossJoin(F.broadcast(ray))
-        .crossJoin(F.broadcast(trace))
-        .select(
-            F.col("j").cast("long").alias("dim"),
-            (F.col("v_e3").cast("double") / F.lit(1000.0)).alias("loading"),
-            round_half_up(eig, 4).alias("eigenvalue"),
-            round_half_up(mean_eig, 4).alias("mean_eigenvalue"),
-            round_half_up(eig / mean_eig, 4).alias("anisotropy_ratio"),
-        )
-        .orderBy("dim")
-    )
+    return v.select(
+        F.col("j").alias("dim"),
+        (F.col("v_e3").cast("double") / F.lit(1000.0)).alias("loading"),
+        round_half_up(eig, 4).alias("eigenvalue"),
+        round_half_up(mean_eig, 4).alias("mean_eigenvalue"),
+        round_half_up(eig / mean_eig, 4).alias("anisotropy_ratio"),
+    ).orderBy("dim")
 
 
 def _sql_pca() -> str:

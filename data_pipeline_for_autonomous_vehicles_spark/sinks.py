@@ -132,15 +132,6 @@ def write_bucketed(
     )
 
 
-def append_stream_partitioned(batch_df: DataFrame, path: str, time_col: str = "ts") -> None:
-    """foreachBatch-compatible append variant (streaming sinks, SURVEY §2.9
-    R4). Plain append is at-least-once under replay (a crash between the
-    data write and the checkpoint commit re-appends the batch) — the same
-    semantics as the reference consumer (SURVEY §2.9 R5). Use
-    `append_stream_exactly_once` when duplicates are not acceptable."""
-    write_time_partitioned(batch_df, path, time_col=time_col, mode="append")
-
-
 def append_stream_exactly_once(
     batch_df: DataFrame,
     batch_id: int,
